@@ -38,33 +38,13 @@ def _env_int(name: str, default: int) -> int:
         return default
 
 
-def _dump_round_plan(df: DataFrame, name: str) -> None:
-    """VERDICT r13 #6/#8: when SPARK_GRAFT_DUMP_ROUND_PLAN names a
-    directory, write the formatted plan of ONE iteration's per-round
-    DataFrame there — the per-round exchange-elision claims become
-    directly visible artifacts instead of code-comment assertions. Off
-    (no env var) in every normal run: zero cost."""
-    out = os.environ.get("SPARK_GRAFT_DUMP_ROUND_PLAN")
-    if not out:
-        return
-    try:
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        os.makedirs(out, exist_ok=True)
-        with open(os.path.join(out, f"{name}_round_aggregate.txt"), "w") as f:
-            f.write(txt)
-    except Exception:
-        pass
-
-
 def _dec_key(n):
     """Exact integer key whose order equals the LEXICOGRAPHIC order of
     str(n) over nonnegative int64 arrays (n < 10^12): decimal strings
     compare like the pair (n / 10^digits, digits) — scale the fraction
     to 10^12 exactly (n · 10^(12−digits), an integer) and pack the
     digit count into the low 4 bits. Digit count via exact integer
-    threshold compares, never float log10. Lets the graph driver tiers
+    threshold compares, never float log10. Lets the graph numpy tiers
     reproduce Spark's binary-UTF8 string comparisons on 'c<k>'/'s<k>'
     node names with pure int64 numpy ops (pytest-pinned against str
     sort on randomized inputs)."""
@@ -82,9 +62,7 @@ N_ITER = 12
 # broadcast the per-iteration rank vector while it plausibly fits an
 # executor (~16 B/node → ~32 MB at the cap); past this the shuffle
 # join takes over (see graph_pagerank body)
-PR_BROADCAST_MAX_NODES = _env_int(
-    "SPARK_GRAFT_PR_BROADCAST_MAX_NODES", 2_000_000
-)
+PR_BROADCAST_MAX_NODES = 2_000_000
 # convergence early-exit: stop once the per-round L1 rank delta drops
 # below PR_TOL_L1 (VERDICT r5 #5). NOTE the measured negative result
 # (SCALE.md §14.3): PageRank's update is a DAMPING-contraction in L1,
@@ -133,32 +111,21 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PR_SCALE = 10**15  # fixed-point rank units (round-12 oracle conversion)
-# r13 optimization gate: below this node count the per-round rank
-# vector lives on the DRIVER (a dict of exact integers) instead of a
-# checkpointed distributed relation. Below PR_BROADCAST_MAX_NODES the
-# vector is already collected to the driver and shipped whole to every
-# executor each round (that is what a broadcast IS), so holding it
-# driver-side moves no new bytes — it just collapses the per-round job
-# count from 3 (broadcast build ×2 + localCheckpoint) to 1 (the
-# node-keyed aggregate collect). The middle regime
-# (PR_DRIVER_MAX_NODES, PR_BROADCAST_MAX_NODES] keeps the r12
-# broadcast loop; past the broadcast gate the shuffle join remains.
-PR_DRIVER_MAX_NODES = _env_int("SPARK_GRAFT_PR_DRIVER_MAX_NODES", 250_000)
 
-# r14 optimization gate (optimization round 2 — the betweenness/
-# closeness driver-replay pattern one level up): below this DIRECTED
-# pair count the whole iteration replays on the driver in numpy over
-# the collected (a, b, w) pair list — ~20 B/row, ≤ ~160 MB at the
-# default gate, the llm CC_DRIVER_MAX_PAIRS collect-budget class. The
-# replay is arithmetic-identical to the Spark expressions (float64
-# multiply/divide are IEEE-correctly-rounded in both; round-half-away
-# = floor(x) + (frac ≥ 0.5) replicates Spark's HALF_UP round on
-# positive doubles — the SAME replay tests/test_graph.py has pinned
-# bit-for-bit since round 12; integer mass sums are order-free), so
-# the tier changes job count (12 per-round jobs → 1 collect), never
-# values. Past the gate the r13 driver-vector tier, the broadcast
-# tier, then the shuffle tier stand unchanged — all three
-# pytest-forced via these env-overridable gates.
+# Two tiers per iterative graph operator (pagerank, label_prop, mst):
+# below this DIRECTED pair count the whole iteration replays on the
+# driver in numpy over the collected (a, b, w) pair list — ~20 B/row,
+# ≤ ~160 MB at the default gate, the llm CC_DRIVER_MAX_PAIRS
+# collect-budget class. The replay is arithmetic-identical to the
+# Spark expressions (float64 multiply/divide are IEEE-correctly-rounded
+# in both; round-half-away = floor(x) + (frac ≥ 0.5) replicates Spark's
+# HALF_UP round on positive doubles — the SAME replay
+# tests/test_graph.py has pinned bit-for-bit since round 12; integer
+# mass sums are order-free), so the tier changes job count (12
+# per-round jobs → 1 collect), never values. Past the gate the one
+# distributed loop runs; inside it PR_BROADCAST_MAX_NODES only picks
+# the join hint for the per-round state. Both tiers and both join
+# hints are pytest-forced via these gates.
 PR_LOCAL_MAX_EDGES = _env_int("SPARK_GRAFT_PR_LOCAL_MAX_EDGES", 8_000_000)
 
 
@@ -298,7 +265,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_pairs = ipair.count()
     n_edges = 2 * n_pairs
     if n_pairs == 0:
-        # empty-graph guard (ADVICE r13): the driver tiers build
+        # empty-graph guard (ADVICE r13): the numpy tier builds
         # pandas frames that cannot carry an explicit schema when
         # empty — return one here instead (reachable via corpus knobs,
         # never on shipped testdata)
@@ -382,6 +349,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("rank").cast("double") / F.lit(1e15)).alias("rank"),
             F.substring("node", 1, 1).alias("kind"),
         )
+    # distributed loop (> PR_LOCAL_MAX_EDGES)
     iedges = ipair.unionAll(
         ipair.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
     )
@@ -417,91 +385,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Past the threshold (a rank vector too big to ship) the plain
     # shuffle join remains, which is the 1000-executor shape anyway.
     broadcast_ranks = n_nodes <= PR_BROADCAST_MAX_NODES
-    if n_nodes <= PR_DRIVER_MAX_NODES:
-        # r13: driver-held rank vector (see PR_DRIVER_MAX_NODES). All
-        # ARITHMETIC stays in Spark SQL expressions — the same
-        # round/cast chains as the distributed branch, so no float op
-        # changes engines: the teleport/init constants evaluate once
-        # via a OneRowRelation, the per-edge contribution and the
-        # 0.85-damped mass run inside the one per-round aggregate job,
-        # and Python only holds the integer dict, fills absent nodes
-        # with the teleport constant (≡ coalesce(mass, 0)) and sums
-        # the exact-integer L1 delta for the early-exit safety net.
-        #
-        # Per-round plan shape (measured, guide §2.3/§2.4): integer
-        # node keys, and the edge cache is HASH-PARTITIONED BY b so
-        # the per-round aggregate reuses the cache partitioning and
-        # plans NO Exchange — each round is one single-stage job
-        # (+ the model-sized broadcast build) with Arrow transfers
-        # both ways. Round cost 0.77 → 0.36 s at sf0.1 from the
-        # exchange elision + int keys.
-        import pandas as pd
-
-        inorm = inorm0.repartition(k_parts, "b").persist()
-        inorm.count()
-        ids = sorted(r.a for r in node_rel.collect())
-        ipair.unpersist()
-        consts = spark.sql(
-            f"SELECT CAST(round(1e15 / {n_nodes}) AS BIGINT) AS r0,"
-            f" CAST(round(0.15e15 / {n_nodes}) AS BIGINT) AS tp"
-        ).first()
-        r0, teleport = consts.r0, consts.tp
-        state = dict.fromkeys(ids, r0)
-        for _round in range(N_ITER):
-            rdf = spark.createDataFrame(
-                pd.DataFrame(
-                    {"node": list(state.keys()),
-                     "rank": list(state.values())}
-                )
-            )
-            res_df = (
-                inorm.join(F.broadcast(rdf), inorm.a == rdf.node)
-                .groupBy(F.col("b").alias("node"))
-                .agg(
-                    F.sum(
-                        F.expr(
-                            "CAST(round(CAST(rank AS DOUBLE) * p) AS BIGINT)"
-                        )
-                    ).alias("mass")
-                )
-                .select(
-                    "node",
-                    F.expr(
-                        "CAST(round(0.85 * CAST(mass AS DOUBLE)) AS BIGINT)"
-                    ).alias("dmass"),
-                )
-            )
-            if _round == 0:
-                _dump_round_plan(res_df, "graph_pagerank")
-            res = res_df.toPandas()
-            new_state = dict.fromkeys(ids, teleport)
-            for nid, dmass in zip(res["node"], res["dmass"]):
-                nid = int(nid)
-                if nid in new_state:
-                    new_state[nid] = teleport + int(dmass)
-            l1 = sum(abs(new_state[i] - state[i]) for i in ids)
-            state = new_state
-            if l1 < PR_TOL_L1 * PR_SCALE:
-                break
-        inorm.unpersist()
-        out = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "node": [
-                        ("c" if i % 2 else "s") + str(i // 2) for i in ids
-                    ],
-                    "rank": [state[i] for i in ids],
-                }
-            )
-        )
-        return out.select(
-            "node",
-            (F.col("rank").cast("double") / F.lit(1e15)).alias("rank"),
-            F.substring("node", 1, 1).alias("kind"),
-        )
-    # distributed branches (> PR_DRIVER_MAX_NODES): derive the string
-    # relations from the int-keyed pair cache (one pass, identical
-    # values) and run the pre-r13 loop unchanged
+    # derive the string relations from the int-keyed pair cache (one
+    # pass, identical values)
     _name = "concat(IF(pmod({c}, 2) = 0, 's', 'c'), CAST({c} DIV 2 AS STRING))"
     norm = (
         inorm0.selectExpr(
@@ -1298,7 +1183,8 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").alias("community"),
             F.substring("node", 1, 1).alias("kind"),
         )
-    # same size-aware edge-cache packing as graph_pagerank (§14.5):
+    # distributed loop (> PR_LOCAL_MAX_EDGES), with the same
+    # size-aware edge-cache packing as graph_pagerank (§14.5):
     # 6 rounds × tiny stages × 32 tasks is scheduler-bound locally;
     # the clamp no-ops once edges outgrow the cores
     n_edges = 2 * n_pairs
@@ -1315,89 +1201,8 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     n_nodes = inode_rel.count()
-    if n_nodes <= PR_DRIVER_MAX_NODES:
-        # r13: driver-held label vector (the graph_pagerank
-        # PR_DRIVER_MAX_NODES rationale — below the broadcast gate the
-        # vector ships whole every round anyway; holding it driver-side
-        # collapses 3 jobs/round to 1). The weighted argmax — integer
-        # cent sums, min(struct(-wt, label)) — runs entirely in the one
-        # per-round Spark aggregate; Python only applies the adopted
-        # labels to the dict (exact string assignment, no arithmetic).
-        # Join/group keys are INTEGER node ids and the edge cache is
-        # hash-partitioned by a, so BOTH aggregate levels reuse the
-        # cache partitioning (hashpartitioning(a) clusters (a, nl)
-        # too) and each round plans NO Exchange. Labels stay STRINGS —
-        # the min(struct(-wt, nl)) tie-break is lexicographic on the
-        # label and must not change order.
-        import pandas as pd
-
-        iedges = (
-            ipair.unionAll(
-                ipair.select(
-                    F.col("b").alias("a"), F.col("a").alias("b"), "w"
-                )
-            )
-            .repartition(k_parts, "a")
-            .persist()
-        )
-        iedges.count()
-        ids = sorted(r.a for r in inode_rel.collect())
-        ipair.unpersist()
-        node_list = [
-            ("c" if i % 2 else "s") + str(i // 2) for i in ids
-        ]
-        id_of = dict(zip(node_list, ids))
-        state = {nd: nd for nd in node_list}
-        for r in range(LPA_ROUNDS):
-            side_mod = 0 if r % 2 == 0 else 1  # 's' even, 'c' odd
-            ldf = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "b": [id_of[nd] for nd in node_list],
-                        "nl": [state[nd] for nd in node_list],
-                    }
-                )
-            )
-            adopted_df = (
-                iedges.filter(F.col("a") % 2 == side_mod)
-                .join(F.broadcast(ldf), "b")
-                .groupBy("a", "nl")
-                .agg(F.sum("w").cast("bigint").alias("wt"))
-                .groupBy("a")
-                .agg(
-                    F.min(
-                        F.struct((-F.col("wt")).alias("nw"), F.col("nl"))
-                    )
-                    .getField("nl")
-                    .alias("new_label")
-                )
-            )
-            if r == 0:
-                _dump_round_plan(adopted_df, "graph_label_prop")
-            adopted = adopted_df.toPandas()
-            for aid, nl in zip(adopted["a"], adopted["new_label"]):
-                nd = (
-                    ("c" if aid % 2 else "s") + str(int(aid) // 2)
-                )
-                if nd in state:
-                    state[nd] = nl
-        iedges.unpersist()
-        out = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "node": node_list,
-                    "label": [state[nd] for nd in node_list],
-                }
-            )
-        )
-        return out.select(
-            "node",
-            F.col("label").alias("community"),
-            F.substring("node", 1, 1).alias("kind"),
-        )
-    # distributed branch (> PR_DRIVER_MAX_NODES): derive the string
-    # relations from the int-keyed pair cache (one pass, identical
-    # values) and run the pre-r13 loop unchanged
+    # derive the string relations from the int-keyed pair cache (one
+    # pass, identical values)
     _name = "concat(IF(pmod({c}, 2) = 0, 's', 'c'), CAST({c} DIV 2 AS STRING))"
     edges = (
         ipair.unionAll(
@@ -2494,21 +2299,23 @@ MST_ROUNDS = 8  # Borůvka rounds unrolled in the oracle (measured
 # fixpoint 3/4/6 at sf0.001/0.01/0.1 — margin ≥ 2, pytest-pinned)
 MST_CC_ITERS = 34  # per-round CC Jacobi iterations in the oracle
 # (measured max 27 at sf0.1 — margin 7, pytest-pinned)
-# r14 tier gate (the graph_pagerank PR_LOCAL_MAX_EDGES shape): below
+# numpy-tier gate (the graph_pagerank PR_LOCAL_MAX_EDGES shape): below
 # this directed pair count the WHOLE Borůvka loop replays in numpy on
 # the collected pair list — the per-round Spark argmin jobs collapse
 # to one Arrow collect. The per-component argmin min(struct(w, u, v))
 # is replayed as a lexsort on (w, u_rank, v_rank), where the ranks
 # index the lexicographically sorted node-name universe (pure-ASCII
 # names: numpy string sort ≡ Spark binary UTF8 order), so the unique
-# MSF's total order is bit-identical. Tier-parity pytest forces the
-# gate off and asserts row equality.
+# MSF's total order is bit-identical. Past the gate the one
+# distributed Borůvka loop runs. Tier-parity pytest forces the gate
+# off and asserts row equality.
 MST_LOCAL_MAX_EDGES = _env_int("SPARK_GRAFT_MST_LOCAL_MAX_EDGES", 8_000_000)
 
-MST_UF_MAX_EDGES = 2_000_000  # driver union-find fast-path gate: the
-# accumulated forest is NODE-sized (≤ V−1 edges), so below this it
-# collects like pagerank's rank broadcast; above, the distributed
-# min-label loop runs (the PR_BROADCAST_MAX_NODES gate pattern)
+MST_UF_MAX_EDGES = 2_000_000  # forest-labelling gate inside the
+# distributed loop (_forest_components): the accumulated forest is
+# NODE-sized (≤ V−1 edges), so below this it collects for a driver
+# union-find; above, the distributed Jacobi min-label loop runs. Both
+# sides are pytest-forced row-identical.
 
 
 def _mst_oracle() -> str:
@@ -2523,7 +2330,7 @@ def _mst_oracle() -> str:
     previous round's labels; measured convergence ≤ 27 iterations at
     sf0.1 (margin pinned). Labels are internal: any algorithm yielding
     the same PARTITION yields the same cross-edge sets and per-block
-    argmins, which is why the engine's union-find fast path and this
+    argmins, which is why the engine's union-find labelling and this
     Jacobi unroll agree exactly. Every CTE is MATERIALIZED — the
     weight chain references each lab table three times and DuckDB
     would otherwise re-inline it exponentially (the _qc_oracle
@@ -2614,17 +2421,16 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured fixpoint 3/4/6 rounds at the three SFs (≤ MST_ROUNDS−2,
     margin-pinned).
 
-    Scale: the per-round cost is ONE join of the (persisted) edge
-    relation against the node-sized component map plus one
-    per-component argmin — both key on node/component ids, the
-    map-side-combinable shape; the edge relation never rewrites. The
-    accumulated forest is NODE-sized (≤ V−1 edges), so component
-    labels take the pagerank-style gate: below MST_UF_MAX_EDGES the
-    driver runs an exact union-find on the collected forest (entity-
-    scale, like the rank broadcast); above it, a distributed
-    min-label+pointer-jump loop computes the same partition (labels
-    are partition-invariant, so both paths agree bit-for-bit — the
-    fallback is exercised in pytest with the gate forced to 0).
+    Scale: below MST_LOCAL_MAX_EDGES the whole loop replays in numpy
+    off one Arrow collect. Above it, the per-round cost is ONE join of
+    the (persisted) edge relation against the node-sized component
+    map plus one per-component argmin — both key on node/component
+    ids, the map-side-combinable shape; the edge relation never
+    rewrites. The accumulated forest is NODE-sized (≤ V−1 edges), so
+    its component labels (_forest_components) come from an exact
+    driver union-find below MST_UF_MAX_EDGES and from a distributed
+    min-label loop above it (labels are partition-invariant, so both
+    agree bit-for-bit — pytest forces each gate to 0).
     Deterministic: integers and strings end to end, no floats
     anywhere."""
     # r13 optimization (the graph_pagerank shape): one persisted
@@ -2672,7 +2478,7 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
         # by (w, key(u), key(v)), and every per-round argmin becomes a
         # plain np.minimum.at over int64 ranks — so the selected edge
         # multiset and the final min-name component labels are
-        # bit-identical to the Spark-argmin tier below.
+        # bit-identical to the distributed loop below.
         import numpy as np
         import pandas as pd
 
@@ -2761,112 +2567,14 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "u", "v", F.col("w").cast("bigint").alias("w"), "component"
         )
+    # distributed loop (> MST_LOCAL_MAX_EDGES): string relations
+    # derived from the pair cache
     inode_rel = (
         ipair.select(F.col("ui").alias("i"))
         .unionAll(ipair.select(F.col("vi").alias("i")))
         .distinct()
     )
     n_nodes = inode_rel.count()
-    fast = n_nodes <= MST_UF_MAX_EDGES
-    if fast:
-        # Driver-held component map (node-sized, the pagerank
-        # PR_DRIVER_MAX_NODES rationale): per round ONE broadcast-join
-        # + argmin job over the cached pair relation — the component
-        # labels are partition-invariant, so int union-find roots
-        # serve as labels mid-round; min-STRING labels are computed
-        # once at the end exactly like before.
-        import pandas as pd
-
-        ids = [r.i for r in inode_rel.collect()]
-
-        def _nm(i: int) -> str:
-            return ("c" if i % 2 else "s") + str(i // 2)
-
-        iparent: dict[int, int] = {i: i for i in ids}
-
-        def ifind(x: int) -> int:
-            while iparent[x] != x:
-                iparent[x] = iparent[iparent[x]]
-                x = iparent[x]
-            return x
-
-        sel_fast: list[tuple] = []
-        comp_of = {i: i for i in ids}
-        for _round in range(MST_ROUNDS):
-            cdf = spark.createDataFrame(
-                pd.DataFrame(
-                    {"n": ids, "c": [comp_of[i] for i in ids]}
-                )
-            )
-            cu = F.broadcast(
-                cdf.select(F.col("n").alias("ui"), F.col("c").alias("cu"))
-            )
-            cv = F.broadcast(
-                cdf.select(F.col("n").alias("vi"), F.col("c").alias("cv"))
-            )
-            # non-cross edges drop in-flight (components only merge);
-            # both component sides argmin in ONE pass. Per-component
-            # winners come back via Arrow; the same-edge-picked-twice
-            # dedup happens in the driver set instead of a second
-            # shuffle (row order is irrelevant: the union-find
-            # PARTITION and the output multiset are order-invariant).
-            res_df = (
-                ipair.join(cu, "ui")
-                .join(cv, "vi")
-                .filter(F.col("cu") != F.col("cv"))
-                .select(
-                    F.explode(F.array("cu", "cv")).alias("c"),
-                    "u",
-                    "v",
-                    "w",
-                )
-                .groupBy("c")
-                .agg(F.min(F.struct("w", "u", "v")).alias("k"))
-                .select("k.u", "k.v", "k.w")
-            )
-            if _round == 0:
-                _dump_round_plan(res_df, "graph_mst")
-            res = res_df.toPandas()
-            new = {
-                (u, v, int(w))
-                for u, v, w in zip(res["u"], res["v"], res["w"])
-            }
-            if not new:
-                break
-            sel_fast.extend(new)
-            for ru, rv, _w in new:
-                a, b = int(ru[1:]) * 2 + 1, int(rv[1:]) * 2
-                ra, rb = ifind(a), ifind(b)
-                if ra != rb:
-                    iparent[ra] = rb
-            comp_of = {i: ifind(i) for i in ids}
-        ipair.unpersist()
-        if not sel_fast:
-            return spark.createDataFrame(
-                [], "u string, v string, w bigint, component string"
-            )
-        groups_f: dict[int, list[str]] = {}
-        for i in ids:
-            groups_f.setdefault(ifind(i), []).append(_nm(i))
-        lab_f: dict[str, str] = {}
-        for g in groups_f.values():
-            m = min(g)
-            for nm in g:
-                lab_f[nm] = m
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "u": [u for u, _, _ in sel_fast],
-                    "v": [v for _, v, _ in sel_fast],
-                    "w": [w for _, _, w in sel_fast],
-                    "component": [lab_f[u] for u, _, _ in sel_fast],
-                }
-            )
-        ).select(
-            "u", "v", F.col("w").cast("bigint").alias("w"), "component"
-        )
-    # distributed path (> MST_UF_MAX_EDGES): string relations derived
-    # from the pair cache, pre-r13 loop unchanged
     edges = ipair.select("u", "v", "w").localCheckpoint()
     nodes = (
         edges.select(F.col("u").alias("node"))
@@ -2879,7 +2587,7 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
     bcast = n_nodes <= PR_BROADCAST_MAX_NODES  # node-sized map: the
     # pagerank broadcast gate — below it the edge relation never
     # shuffles for the component join
-    sel: DataFrame | None = None  # distributed-path accumulator
+    sel: DataFrame | None = None  # selected-forest accumulator
     for _ in range(MST_ROUNDS):
         cu = comp.withColumnRenamed("node", "u").withColumnRenamed(
             "lab", "cu"

@@ -56,8 +56,9 @@ def llm_media_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sampled-frame fan-out isn't SQL-expressible."""
     from local_etl_spark.multimodal.columns import frame_sample
 
-    # r14: frame sampling reads only video rows — synthesize only them
-    media = synthesize_media(t(spark, sf_dir, "documents"), "video")
+    # every modality: non-video payloads emit their one whole-payload
+    # row, so a video-only synthesis would drop rows
+    media = synthesize_media(t(spark, sf_dir, "documents"))
     return frame_sample(media, every_n=10)
 
 

@@ -242,8 +242,12 @@ FIXED_THIS_ROUND: tuple[str, ...] = ()
 ROWS_ONLY_REPRESENT: tuple[str, ...] = (
     # r14 (optimization round): every rows-only op already has a
     # driver record; re-present the rows-only media ops whose
-    # synthesis input was modality-filtered this round so the external
-    # spark_rows check re-attests the row sets are unchanged.
+    # synthesis input was modality-filtered that round so the external
+    # spark_rows check records their row counts afresh. The filter was
+    # row-preserving for six of them but dropped llm_media_framesample's
+    # non-video rows (643 → 309 at sf0.01); that call site is reverted
+    # to the unfiltered synthesis and its 643 rows are pinned in
+    # tests/test_llm_media_text.py.
     "llm_image_phash",
     "llm_audio_fingerprint",
     "llm_video_scenes",

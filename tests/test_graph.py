@@ -568,32 +568,30 @@ def test_mst_equals_kruskal_and_networkx(spark):
 
 
 def test_mst_distributed_fallback_matches_fast_path(spark, monkeypatch):
-    """Force the gates to 0 so the Spark-argmin fast path and then the
-    distributed min-label loop run instead of the r14 numpy tier —
-    results must be IDENTICAL (labels are partition-invariant; all
-    paths compute min labels of the same unique forest). NOTE: the r14
-    MST_LOCAL_MAX_EDGES tier sits in FRONT of MST_UF_MAX_EDGES, so the
-    distributed leg must zero both."""
+    """Force each graph_mst gate to 0 in turn and diff against the
+    default numpy tier: MST_LOCAL_MAX_EDGES=0 runs the distributed
+    Borůvka loop with driver union-find forest labels, and
+    MST_UF_MAX_EDGES=0 as well runs it with distributed Jacobi labels.
+    Rows must be IDENTICAL on every leg (labels are partition-invariant;
+    all legs compute min labels of the same unique forest)."""
     import local_etl_spark.queries.graph as G
     from local_etl_spark.registry import get
 
     sf = "/root/testdata/sf0.001"
-    fast = {
-        (r["u"], r["v"], r["w"], r["component"])
-        for r in get("graph_mst").fn(spark, sf).collect()
-    }
+
+    def rows():
+        return {
+            (r["u"], r["v"], r["w"], r["component"])
+            for r in get("graph_mst").fn(spark, sf).collect()
+        }
+
+    numpy_tier = rows()
     monkeypatch.setattr(G, "MST_LOCAL_MAX_EDGES", 0)
-    mid = {
-        (r["u"], r["v"], r["w"], r["component"])
-        for r in get("graph_mst").fn(spark, sf).collect()
-    }
-    assert fast == mid
+    union_find_labels = rows()
+    assert union_find_labels == numpy_tier
     monkeypatch.setattr(G, "MST_UF_MAX_EDGES", 0)
-    slow = {
-        (r["u"], r["v"], r["w"], r["component"])
-        for r in get("graph_mst").fn(spark, sf).collect()
-    }
-    assert fast == slow
+    jacobi_labels = rows()
+    assert jacobi_labels == numpy_tier
 
 
 def test_dec_key_matches_decimal_string_order():
@@ -622,34 +620,26 @@ def test_dec_key_matches_decimal_string_order():
 
 
 def test_graph_driver_tier_parity(spark, monkeypatch):
-    """ADVICE r13 (medium) + the r14 local tiers: every gate tier of
-    graph_pagerank / graph_label_prop must produce identical rows —
-    the r14 numpy replay, the r13 driver-vector loop, the broadcast
-    loop, and the full shuffle loop. The distributed fallbacks contain
-    code (the _name selectExpr reconstruction) that no shipped SF
-    reaches; this forces each gate to 0 in turn and diffs against the
-    default path."""
+    """Every surviving leg of graph_pagerank / graph_label_prop must
+    produce identical rows: the default numpy tier, the distributed
+    loop with the broadcast join hint (PR_LOCAL_MAX_EDGES=0), and the
+    distributed loop with the shuffle join (PR_BROADCAST_MAX_NODES=0
+    as well). The distributed loop contains code (the _name
+    selectExpr reconstruction) that no shipped SF reaches; this forces
+    each gate to 0 in turn and diffs against the default path."""
     import local_etl_spark.queries.graph as G
     from local_etl_spark.registry import get
 
+    sf = "/root/testdata/sf0.001"
     for name in ("graph_pagerank", "graph_label_prop"):
         fn = get(name).fn
-        sf = "/root/testdata/sf0.01"
         base = sorted(map(tuple, fn(spark, sf).collect()))
         monkeypatch.setattr(G, "PR_LOCAL_MAX_EDGES", 0)
-        r13_tier = sorted(map(tuple, fn(spark, sf).collect()))
-        assert r13_tier == base, f"{name}: r13 driver tier diverges"
-        # the deep distributed tiers are slower per round — sf0.001
-        sf = "/root/testdata/sf0.001"
-        monkeypatch.setattr(G, "PR_LOCAL_MAX_EDGES", 8_000_000)
-        base_small = sorted(map(tuple, fn(spark, sf).collect()))
-        monkeypatch.setattr(G, "PR_LOCAL_MAX_EDGES", 0)
-        monkeypatch.setattr(G, "PR_DRIVER_MAX_NODES", 0)
         bcast = sorted(map(tuple, fn(spark, sf).collect()))
-        assert bcast == base_small, f"{name}: broadcast tier diverges"
+        assert bcast == base, f"{name}: broadcast leg diverges"
         monkeypatch.setattr(G, "PR_BROADCAST_MAX_NODES", 0)
         shuffle = sorted(map(tuple, fn(spark, sf).collect()))
-        assert shuffle == base_small, f"{name}: shuffle tier diverges"
+        assert shuffle == base, f"{name}: shuffle leg diverges"
         monkeypatch.undo()
 
 

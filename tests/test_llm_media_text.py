@@ -95,6 +95,17 @@ def test_frame_sample_shape(spark):
             assert rows == [(0, hashlib.sha1(payload).hexdigest())]
 
 
+def test_framesample_query_keeps_non_video_rows(spark):
+    """The registered llm_media_framesample query emits every modality:
+    one whole-payload row per image/audio doc plus the sampled video
+    frames. A video-only synthesis input drops the non-video rows
+    (309 rows instead of 643 at sf0.01)."""
+    df = get("llm_media_framesample").fn(spark, SF)
+    assert df.count() == 643
+    kinds = {r["modality"] for r in df.select("modality").distinct().collect()}
+    assert kinds == {"image", "audio", "video"}
+
+
 def test_fingerprint_near_dups_share(spark):
     """Winnowing guarantee: docs sharing long runs (the planted
     near-dups) share fingerprints; fingerprints are deterministic."""

@@ -7,7 +7,7 @@ separate processes and records the 32v8 speedup per entry. The graph
 queries' driver-local tiers are core-count-insensitive BY DESIGN (the
 whole point is removing distributed overhead at model scale), so for
 the graph loops the env-tunable gates are forced to the distributed
-tiers — the regime a real cluster runs — while the dedup/sql entries
+loops — the regime a real cluster runs — while the dedup/sql entries
 run their default (distributed) paths.
 
 Usage: python tools_scaling_8v32.py [sf1_dir]
@@ -64,10 +64,9 @@ print("RESULT " + json.dumps(out))
 def run(cpus: int) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_CPUS"] = str(cpus)
-    # force the graph loops onto their DISTRIBUTED tiers (broadcast
+    # force the graph loops onto their DISTRIBUTED loops (broadcast
     # regime — the real-cluster shape below the broadcast gate)
     env["SPARK_GRAFT_PR_LOCAL_MAX_EDGES"] = "0"
-    env["SPARK_GRAFT_PR_DRIVER_MAX_NODES"] = "0"
     env["SPARK_GRAFT_MST_LOCAL_MAX_EDGES"] = "0"
     code = CHILD.format(repo=str(REPO), cpus=cpus, sf=SF1, queries=QUERIES)
     p = subprocess.run(
@@ -115,7 +114,7 @@ def main():
     st1, mt1 = calib()
     out = {
         "sf1_dir": SF1,
-        "forced_tiers": "PR_LOCAL=0 PR_DRIVER=0 MST_LOCAL=0 (graph loops on the distributed broadcast tier)",
+        "forced_tiers": "PR_LOCAL=0 MST_LOCAL=0 (graph loops on the distributed loop, broadcast hint)",
         "cpus8": r8,
         "cpus32": r32,
         "speedup_32v8": {
