@@ -666,9 +666,9 @@ def contract_line(
     order = sorted(timings, key=_prio)
     n_extra = sum(1 for n in order if _prio(n)[0] == 0)
 
-    def _pruned(k: int) -> str:
+    def _pruned(k: int, values: dict = timings) -> str:
         return _dump(
-            {n: timings[n] for n in sorted(order[k:])}, k, 2
+            {n: values[n] for n in sorted(order[k:])}, k, 2
         )
 
     if n_extra and len(_pruned(n_extra)) <= cap:
@@ -676,11 +676,14 @@ def contract_line(
         # pinned entry survives — no value-dependent boundary
         return _pruned(n_extra)
     # escape hatch: the pinned set itself overflows — bisect the
-    # smallest name-ordered drop count that fits
+    # smallest name-ordered drop count that fits with every value at a
+    # fixed-width sentinel (as wide as any timing below 1e5 s at 2
+    # significant digits), so the drop count depends on names alone
+    sentinel = dict.fromkeys(timings, 12000.0)
     lo, hi = max(1, n_extra), len(order)
     while lo < hi:
         mid = (lo + hi) // 2
-        if len(_pruned(mid)) <= cap:
+        if len(_pruned(mid, sentinel)) <= cap:
             hi = mid
         else:
             lo = mid + 1

@@ -89,8 +89,7 @@ def main(argv: list[str] | None = None) -> int:
 
         registry._load_all_modules()
         if args.query == "list":
-            for name in registry._presentation_order():
-                spec = registry.REGISTRY[name]
+            for name, spec in registry.REGISTRY.items():
                 kind = "SQL " if spec.oracle else "rows"
                 print(f"{kind}  {name}")
             return 0

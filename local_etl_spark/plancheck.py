@@ -1,7 +1,7 @@
 """Physical-plan inspection helpers for scale audits.
 
 Used by tests/test_plan_audit.py (blanket anti-pattern rules over every
-registered query) and tools_window_sweep.py. The one non-obvious bit:
+registered query). The one non-obvious bit:
 with AQE on, ``executedPlan()`` is a bare ``AdaptiveSparkPlanExec`` whose
 initial plan is a field, not a child — so tree-walking the JVM plan (or
 its JSON) sees nothing. The formatted explain string prints the full

@@ -95,6 +95,20 @@ def test_escape_hatch_prunes_pinned_by_name_etl_last():
     ] or kept_pinned == sorted(_PINNED_VISIBLE)[-len(kept_pinned):]
 
 
+def test_escape_hatch_survivors_are_timing_independent():
+    # the escape hatch picks its drop count at a fixed value width, so
+    # the same pinned names survive whatever the measured seconds are
+    for cap, value_sets in ((1200, (1.0, 123.4)), (1850, (0.0123, 123.4))):
+        kept = [
+            set(json.loads(contract_line(
+                99.9, dict.fromkeys(_PINNED_VISIBLE, v), 0.1, cap=cap
+            ))["queries"])
+            for v in value_sets
+        ]
+        assert kept[0] == kept[1], (cap, [len(k) for k in kept])
+        assert 0 < len(kept[0]) < len(_PINNED_VISIBLE)
+
+
 def test_r14_visible_set_equals_r13_visible_set():
     # the done-criterion: at the real r14 entry census (88 entries =
     # the 76 pinned r13-visible + 12 extras), the visible set is

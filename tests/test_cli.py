@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 from local_etl_spark.__main__ import format_duration
 
 
@@ -21,64 +24,27 @@ def test_format_duration_full_units():
     )
 
 
-def test_presentation_prefix_prioritizes_unverified():
-    """The driver verifies the first DRIVER_PREFIX presentation entries.
-    The prefix must (a) lead with this round's fixes, (b) fill with
-    SQL-oracled queries the driver has never checked (priority families
-    whole — VERDICT r5 #2 wants the sql family closed out), and (c)
-    spend the TAIL on rows-only re-presents so each gets a driver
-    spark_rows record (VERDICT r5 #3) — re-verifying known greens
-    wastes the bounded correctness window (VERDICT r3 item 1)."""
+def test_registry_presents_queries_in_registration_order():
+    from local_etl_spark import registry
+
+    queries = registry.all_queries()
+    assert list(queries) == list(registry.REGISTRY)
+    assert len(queries) == 396
+    oracled = [n for n, s in registry.REGISTRY.items() if s.oracle]
+    assert list(registry.all_oracles()) == oracled
+    assert len(oracled) == 382
+
+
+def test_queries_md_lists_every_registered_query():
+    """QUERIES.md is generated (tools_gen_queries_md.py); regenerate it
+    when this fails."""
     from local_etl_spark import registry
 
     registry._load_all_modules()
-    order = registry._presentation_order()
-    assert len(order) == len(registry.REGISTRY)
-    assert len(set(order)) == len(order)
-    prefix = order[: registry.DRIVER_PREFIX]
-    fixed = [n for n in registry.FIXED_THIS_ROUND if n in registry.REGISTRY]
-    represent = [
-        n for n in registry.ROWS_ONLY_REPRESENT if n in registry.REGISTRY
-    ]
-    assert prefix[: len(fixed)] == fixed
-    # rows-only re-presents are contiguous in the prefix, immediately
-    # after the fresh block (round 8: the fresh queue no longer fills
-    # head_len, so rechecks pad the literal tail — the contract is
-    # that every re-present lands IN the prefix, which the driver
-    # records regardless of position)
-    if represent:
-        i = prefix.index(represent[0])
-        assert prefix[i : i + len(represent)] == represent
-    # everything before the re-presents is SQL-oracled and NEVER
-    # driver-checked (the fresh block); rechecks may pad after them
-    mid = prefix[len(fixed) : prefix.index(represent[0])] if represent else []
-    assert all(registry.REGISTRY[n].oracle for n in mid)
-    fresh = [n for n in mid if n not in registry.DRIVER_CHECKED]
-    assert len(fresh) == len(mid), "recheck leaked into the fresh block"
-    # every never-checked SQL-oracled query must be in the prefix once
-    # the fresh queue fits (r8 regime: total external coverage)
-    all_fresh = [
-        n for n, s in registry.REGISTRY.items()
-        if s.oracle and n not in registry.DRIVER_CHECKED
-    ]
-    if len(all_fresh) + len(fixed) + len(represent) <= registry.DRIVER_PREFIX:
-        assert set(all_fresh) <= set(prefix), "fresh query missed the prefix"
-    else:
-        assert len(fresh) >= 40, f"only {len(fresh)} never-checked in prefix"
-    # priority families are exhausted before any other fresh entry
-    for fam in registry._PRIORITY_FAMILIES:
-        fam_fresh_all = [
-            n for n, s in registry.REGISTRY.items()
-            if s.oracle and s.family == fam and n not in registry.DRIVER_CHECKED
-        ]
-        assert set(fam_fresh_all) <= set(mid), f"{fam} not closed out"
-    # remaining rows-only entries must come last
-    rows_only_tail = [
-        n for n in order
-        if not registry.REGISTRY[n].oracle and n not in registry.ROWS_ONLY_REPRESENT
-    ]
-    first = order.index(rows_only_tail[0])
-    assert all(not registry.REGISTRY[n].oracle for n in order[first:])
+    text = (Path(__file__).parent.parent / "QUERIES.md").read_text()
+    listed = re.findall(r"^\| \d+ \| `([^`]+)` \|", text, re.M)
+    assert len(listed) == len(set(listed))
+    assert set(listed) == set(registry.REGISTRY)
 
 
 def test_cli_query_runner(spark, capsys):
