@@ -38,10 +38,13 @@ from local_etl_spark.etl.validate import (
     CLASS_MISSING,
     CLASS_OTHER,
     CLASS_VALID,
+    ERR_MSG,
+    ERR_SLOT,
+    Prims,
     _pythonize_message,
-    compiled_validity_leaves,
+    compile_validity,
     float_head_token,
-    leaf_exprs,
+    prims,
     render_typed,
 )
 
@@ -334,7 +337,7 @@ def _fv(obj: str, fname: str) -> Column:
 
 
 def _render_fv(
-    fv: Column,
+    p: Prims,
     json_type: str | None = None,
     valid_col: Column | None = None,
 ) -> Column:
@@ -344,22 +347,12 @@ def _render_fv(
     declared schema type) narrows the render to the shapes a VALID row
     can hold — see validate.render_typed, incl. the ``valid_col``
     contract (v2-only boolean fast guard)."""
-    sv = F.schema_of_variant(fv)
     return F.coalesce(
-        F.when(F.is_variant_null(fv), F.lit("")).otherwise(
-            render_typed(fv, sv, json_type, valid_col)
+        F.when(F.is_variant_null(p.fv), F.lit("")).otherwise(
+            render_typed(p, json_type, valid_col)
         ),
         F.lit(""),
     )
-
-
-def _render_field(
-    obj: str,
-    fname: str,
-    json_type: str | None = None,
-    valid_col: Column | None = None,
-) -> Column:
-    return _render_fv(_fv(obj, fname), json_type, valid_col)
 
 
 def classify(docs: DataFrame, schema: EnvelopeSchema) -> DataFrame:
@@ -367,49 +360,59 @@ def classify(docs: DataFrame, schema: EnvelopeSchema) -> DataFrame:
 
     Stacked projections on purpose (Catalyst's CollapseProject declines
     to inline multiply-referenced non-trivial aliases, so the splits
-    survive optimization):
+    survive optimization), one per stage of validate.Validity:
       1. leaf extraction — each variant leaf + its type string computed
-         ONCE per row (CASE branches can't share subexpressions, so the
-         compiled error_msg CASE would otherwise re-walk the variant in
-         every branch — bigger codegen, slower janino compile, more
-         per-row work);
-      2. the compiled ~40-branch error_msg CASE over those leaves;
-      3. the leading float token of the message, bound as its own
+         ONCE per row (CASE branches can't share subexpressions);
+      2. the priority CASE → int ``_err_slot`` (NULL = valid);
+      3. the slot's offending variant, its schema string and its
+         message tail — the leaf columns are dropped here, so the
+         persisted classification stays slim (caching ~26 variant
+         leaves per row measurably slows materialization);
+      4. the raw message, with one render_value site for every slot;
+      5. the leading float token of the message, bound as its own
          attribute — _py_float_text references its input ~40× across
          CASE branches (branches defeat codegen subexpr elimination),
          so an inlined regexp_extract token re-embeds the extract per
          reference and blows janino's 64 KB method limit (the round-5
          regression: silent interpreted fallback of this projection);
-      4. class/validity derived from error_msg (one copy of the CASE
-         instead of four), DROPPING the leaf columns so the persisted
-         classification stays slim (caching ~26 variant leaves per row
-         measurably slows materialization). The Python float-repr
-         rewrite of the message's leading token also happens here —
-         over the plain error_msg/token COLUMNS, so the big CASE is
-         never re-referenced (validate._pythonize_message docstring).
+      6. the Python float-repr/container rewrite of the message over
+         the bound message/token columns, and error_class / is_valid.
+         ``is_valid`` is ``_err_slot IS NULL``: PushDownPredicates
+         substitutes projection aliases, so a filter on it over an
+         unpersisted classification inlines the slot CASE and the
+         leaves, not the render. ``error_class`` keeps the reference's
+         routing test, the 'is a required property' substring of the
+         message (main.py:183).
     """
-    leaves = leaf_exprs(schema)
-    val = compiled_validity_leaves(schema)
-    msg = F.col("error_msg")
+    val = compile_validity(schema)
+    keep = [*docs.columns, ERR_SLOT]
+    token, finished = _classify_finish()
     staged = (
-        docs.select("*", *[c.alias(n) for n, c in leaves])
-        .select("*", val.error_msg.alias("error_msg"))
-        .select(
-            *docs.columns,
-            "error_msg",
-            float_head_token(msg).alias("_msg_token"),
-        )
+        docs.select("*", *val.leaves)
+        .select("*", val.slot)
+        .select(*keep, *val.offender)
+        .select(*keep, val.message)
+        .select(*keep, *token)
     )
-    return staged.select(
-        *docs.columns,
+    return staged.select(*docs.columns, *finished)
+
+
+@lru_cache(maxsize=1)
+def _classify_finish() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    """classify()'s last two stages, which do not depend on the schema:
+    the message + its bound float token, then the finished columns."""
+    slot, msg = F.col(ERR_SLOT), F.col(ERR_MSG)
+    token = (msg, float_head_token(msg).alias("_msg_token"))
+    finished = (
         _pythonize_message(msg, F.col("_msg_token")).alias("error_msg"),
         F.when(F.col("v").isNull(), CLASS_CORRUPT)
-        .when(msg.isNull(), CLASS_VALID)
+        .when(slot.isNull(), CLASS_VALID)
         .when(msg.contains("is a required property"), CLASS_MISSING)
         .otherwise(CLASS_OTHER)
         .alias("error_class"),
-        msg.isNull().alias("is_valid"),
+        slot.isNull().alias("is_valid"),
     )
+    return token, finished
 
 
 @lru_cache(maxsize=64)
@@ -479,7 +482,7 @@ def _v1_out_columns(schema: EnvelopeSchema) -> tuple:
     DictWriter fieldnames semantics)."""
     slots = list(schema.payload.required) + list(schema.metadata.required)
     cols = {
-        f: _render_fv(F.col(f"_mv_{f}"), _declared(schema, f))
+        f: _render_fv(prims(F.col(f"_mv_{f}")), _declared(schema, f))
         for f in dict.fromkeys(slots)
     }
     has_address = F.col("_mv_address").isNotNull()
@@ -502,35 +505,81 @@ def v1_rows(classified: DataFrame, schema: EnvelopeSchema) -> DataFrame:
     )
 
 
+_NAME_COLS = ("name", "created_by_name")
+
+
+def _v2_sources(schema: EnvelopeSchema) -> dict[str, tuple[str, str]]:
+    """Every value the v2 payload sink renders, as slot -> (envelope
+    object, key): the payload's required fields, both name-ish fields
+    when the header normalizes a name (see _v2_payload_columns), and
+    the FK ``event_id`` from metadata (main2.py:226 — it overwrites a
+    payload-required event_id slot)."""
+    payload_fields, _ = v2_field_names(schema)
+    names = [f for f in schema.payload.required if f != "event_id"]
+    if any(c in payload_fields for c in _NAME_COLS):
+        names += _NAME_COLS
+    out = {f: ("payload", f) for f in dict.fromkeys(names)}
+    out["event_id"] = ("metadata", "event_id")
+    return out
+
+
+_PRIM_SUFFIXES = ("", "_sv", "_s", "_d")
+
+
+def _bound_prims(i: int) -> Prims:
+    """The stage-0 attributes of the i-th rendered slot (by position,
+    so any field name is safe in a column name)."""
+    return Prims(*(F.col(f"_pv{i}{s}") for s in _PRIM_SUFFIXES))
+
+
 @lru_cache(maxsize=64)
-def _v2_stage1(schema: EnvelopeSchema) -> tuple:
-    """Stage 1 of the v2 payload sink: the payload variant probe per
-    unique required slot, the FK probe (metadata.event_id), and the
-    name-normalization inputs — the rendered name/created_by_name
-    values plus their doc-presence flags, each computed ONCE
-    (multiply-referenced by the norm attributes, so CollapseProject
-    keeps the stage). _pv_address is staged unconditionally: the
-    ad-hoc fixes gate on 'address' in the PAYLOAD dict (main2.py:230 —
-    v2 keeps the dicts separate, unlike v1's merge)."""
-    ptypes = {f.name: f.json_type for f in schema.payload.fields}
-    fields = dict.fromkeys(schema.payload.required)
-    fields["address"] = None
-    out = [_fv("payload", f).alias(f"_pv_{f}") for f in fields]
-    out.append(_fv("metadata", "event_id").alias("_fkv_event_id"))
-    for c in ("name", "created_by_name"):
-        out.append(
-            _render_fv(
-                _fv("payload", c), ptypes.get(c), F.col("is_valid")
-            ).alias(f"_nm_{c}")
-        )
+def _v2_prims(schema: EnvelopeSchema) -> tuple:
+    """Stage 0 of the v2 payload sink: the render primitives
+    (validate.Prims) of every rendered slot, bound as ``_pv<i>*``
+    attributes, plus the payload-presence flags the transforms gate on
+    (``_hn_*``). The renders read a value's string form and double text
+    at many sites (the float rewrite alone ~40×); bound here, each read
+    is a slot read instead of a variant walk. ``_hn_address`` is staged
+    unconditionally: the ad-hoc fixes gate on 'address' in the PAYLOAD
+    dict (main2.py:230 — v2 keeps the dicts separate, unlike v1's
+    merge)."""
+    out = []
+    for i, (obj, fname) in enumerate(_v2_sources(schema).values()):
+        p = prims(_fv(obj, fname))
+        for suffix, c in zip(_PRIM_SUFFIXES, (p.fv, p.sv, p.text, p.dbl)):
+            out.append(c.alias(f"_pv{i}{suffix}"))
+    for c in ("address", *_NAME_COLS):
         out.append(_fv("payload", c).isNotNull().alias(f"_hn_{c}"))
     return tuple(out)
 
 
 @lru_cache(maxsize=64)
-def _v2_out_columns(schema: EnvelopeSchema) -> tuple[tuple, tuple]:
-    """Stage 2 of the v2 sinks: payload renders over the staged
-    variants plus the reference's transforms; metadata renders.
+def _v2_stage1(schema: EnvelopeSchema) -> tuple:
+    """Stage 1 of the v2 payload sink: every rendered slot bound as a
+    ``_pr<i>`` attribute, ONCE — the transforms above read the
+    attribute (fix_job alone references its input ~5×, and each
+    reference would otherwise embed a full render)."""
+    ptypes = {f.name: f.json_type for f in schema.payload.fields}
+    mtypes = {f.name: f.json_type for f in schema.metadata.fields}
+    # v2 slots read their OWN envelope object, so is_valid ⇒ declared
+    # shape and the renders take the boolean fast guard (render_typed
+    # valid_col contract; v1 must NOT do this — merged-dict shadowing)
+    valid = F.col("is_valid")
+    out = [
+        _render_fv(
+            _bound_prims(i),
+            (ptypes if obj == "payload" else mtypes).get(fname),
+            valid,
+        ).alias(f"_pr{i}")
+        for i, (obj, fname) in enumerate(_v2_sources(schema).values())
+    ]
+    return (*out, *(F.col(f"_hn_{c}") for c in ("address", *_NAME_COLS)))
+
+
+@lru_cache(maxsize=64)
+def _v2_payload_columns(schema: EnvelopeSchema) -> tuple:
+    """Stage 2 of the v2 payload sink: the reference's transforms over
+    the bound renders, in header order.
 
     Two DISTINCT selectors drive the name normalization in the
     reference (schema-mutation fuzz find, r9): the header insertion
@@ -544,41 +593,20 @@ def _v2_out_columns(schema: EnvelopeSchema) -> tuple[tuple, tuple]:
     CRASHES (NameError on name_split, main2.py:242 — documented
     divergence); the engine prints the restval '' row instead.
     """
-    ptypes = {f.name: f.json_type for f in schema.payload.fields}
-    mtypes = {f.name: f.json_type for f in schema.metadata.fields}
-    # v2 slots read their OWN envelope object, so is_valid ⇒ declared
-    # shape and the renders take the boolean fast guard (render_typed
-    # valid_col contract; v1 must NOT do this — merged-dict shadowing)
-    valid = F.col("is_valid")
-    cols = {
-        f: _render_fv(F.col(f"_pv_{f}"), ptypes.get(f), valid)
-        for f in dict.fromkeys(schema.payload.required)
-    }
-    has_address = F.col("_pv_address").isNotNull()
-    if "address" in cols:
+    cols = {f: F.col(f"_pr{i}") for i, f in enumerate(_v2_sources(schema))}
+    has_address = F.col("_hn_address")
+    if "address" in schema.payload.required:
         cols["address"] = F.when(
             has_address, transforms.fix_address(cols["address"])
         ).otherwise(cols["address"])
-    if "job" in cols:
+    if "job" in schema.payload.required:
         cols["job"] = F.when(
             has_address, transforms.fix_job(cols["job"])
         ).otherwise(cols["job"])
-    # FK propagation: metadata.event_id or '' (main2.py:226) —
-    # overwrites a payload-required event_id slot exactly like the
-    # reference's payload_dict['event_id'] assignment
-    cols["event_id"] = _render_fv(
-        F.col("_fkv_event_id"), mtypes.get("event_id"), valid
-    )
-    payload_fields, metadata_fields = v2_field_names(schema)
-    if any(c in payload_fields for c in ("name", "created_by_name")):
-        for c in ("name", "created_by_name"):
-            if c in cols:
-                cols[c] = F.col(f"_nm_{c}")
-        has = {c: F.col(f"_hn_{c}") for c in ("name", "created_by_name")}
-        norm = {
-            c: transforms.name_norm(F.col(f"_nm_{c}"))
-            for c in ("name", "created_by_name")
-        }
+    payload_fields, _ = v2_field_names(schema)
+    if any(c in payload_fields for c in _NAME_COLS):
+        has = {c: F.col(f"_hn_{c}") for c in _NAME_COLS}
+        norm = {c: transforms.name_norm(cols[c]) for c in _NAME_COLS}
 
         def pick(attr: str) -> Column:
             return (
@@ -589,41 +617,44 @@ def _v2_out_columns(schema: EnvelopeSchema) -> tuple[tuple, tuple]:
 
         cols["prefix"] = pick("prefix")
         cols["suffix"] = pick("suffix")
-        if "name" in cols:
-            cols["name"] = F.when(
-                has["name"], norm["name"]["name"]
-            ).otherwise(cols["name"])
-        if "created_by_name" in cols:
-            cols["created_by_name"] = (
-                F.when(has["name"], cols["created_by_name"])
-                .when(
-                    has["created_by_name"],
-                    norm["created_by_name"]["name"],
-                )
-                .otherwise(cols["created_by_name"])
-            )
-    return (
-        tuple(cols[f].alias(f) for f in payload_fields),
-        tuple(
-            _render_field("metadata", f, mtypes.get(f), valid).alias(f)
-            for f in metadata_fields
-        ),
+        cols["name"] = F.when(has["name"], norm["name"]["name"]).otherwise(
+            cols["name"]
+        )
+        cols["created_by_name"] = (
+            F.when(has["name"], cols["created_by_name"])
+            .when(has["created_by_name"], norm["created_by_name"]["name"])
+            .otherwise(cols["created_by_name"])
+        )
+    return tuple(cols[f].alias(f) for f in payload_fields)
+
+
+@lru_cache(maxsize=64)
+def _v2_metadata_columns(schema: EnvelopeSchema) -> tuple:
+    """The v2 metadata sink: each required metadata field rendered
+    straight off ``v`` (one render per slot, nothing references it
+    twice)."""
+    mtypes = {f.name: f.json_type for f in schema.metadata.fields}
+    valid = F.col("is_valid")
+    return tuple(
+        _render_fv(prims(_fv("metadata", f)), mtypes.get(f), valid).alias(f)
+        for f in v2_field_names(schema)[1]
     )
 
 
-def v2_rows(
-    classified: DataFrame, schema: EnvelopeSchema
-) -> tuple[DataFrame, DataFrame]:
-    """Normalized outputs (v2, main2.py): payload(+FK,+prefix/suffix)
-    and metadata DataFrames; the payload frame stages its variant
-    probes and name-norm inputs (_v2_stage1) below the slot
-    projection."""
-    payload_cols, metadata_cols = _v2_out_columns(schema)
-    staged = classified.select("*", *_v2_stage1(schema))
+def v2_payload_rows(classified: DataFrame, schema: EnvelopeSchema) -> DataFrame:
+    """Normalized payload output (v2, main2.py): payload fields + the
+    event_id FK + prefix/suffix, over the staged primitives ->
+    renders -> transforms plan."""
     return (
-        staged.select(*payload_cols),
-        classified.select(*metadata_cols),
+        classified.select("*", *_v2_prims(schema))
+        .select(*_v2_stage1(schema))
+        .select(*_v2_payload_columns(schema))
     )
+
+
+def v2_metadata_rows(classified: DataFrame, schema: EnvelopeSchema) -> DataFrame:
+    """Normalized metadata output (v2, main2.py)."""
+    return classified.select(*_v2_metadata_columns(schema))
 
 
 def error_log_lines(invalid: DataFrame) -> DataFrame:
@@ -789,8 +820,8 @@ def write_sinks(
             )
         )
     else:
-        payload = v2_rows(kept_first, schema)[0]
-        metadata = v2_rows(kept, schema)[1]
+        payload = v2_payload_rows(kept_first, schema)
+        metadata = v2_metadata_rows(kept, schema)
         writes.append(
             lambda: _write_csv(
                 payload, cfg.path(table.payload_file or f"{table.name}.csv")

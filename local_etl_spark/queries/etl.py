@@ -258,10 +258,11 @@ def etl_validate_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.concat(F.lit('{"metadata": '), meta, F.lit(', "payload": '), payload_ok, F.lit("}")))
     )
     docs = e.select(F.try_parse_json(raw).alias("v"))
-    # classify() stages leaf-extraction -> error_msg -> class projections;
-    # deriving error_class in ONE projection embeds multiple copies of the
-    # ~40-branch message CASE and overflows janino's 64 KB method limit
-    # (interpreted fallback — the slow path at scale).
+    # classify() binds each validity stage (leaves -> error slot ->
+    # offending value -> message -> finish) in its own projection;
+    # deriving error_class in ONE projection would embed a copy of the
+    # message render per reference (janino's 64 KB method limit, the
+    # interpreted fallback — the slow path at scale).
     classified = classify(docs, schema)
     return (
         classified.groupBy("error_class")

@@ -384,10 +384,9 @@ def test_negative_zero_sign_divergence(spark):
         [('{"score": -0.0}',)], "raw string"
     ).select(F.parse_json("raw").alias("v"))
     fv = F.try_variant_get(F.col("v"), "$.score", "variant")
-    sv = F.schema_of_variant(fv)
     row = df.select(
-        V.render_typed(fv, sv, "number").alias("csv_form"),
-        V.render_value(fv, sv, quote_strings=False).alias("msg_form"),
+        V.render_typed(V.prims(fv), "number").alias("csv_form"),
+        V.render_value(V.prims(fv), quote_strings=False).alias("msg_form"),
     ).first()
     assert row["csv_form"] == "0.0"  # engine-defined; Python says -0.0
     assert row["msg_form"] == "0.0"
@@ -412,7 +411,8 @@ def test_classify_and_renders_stay_codegen_compiled(etl_run, spark):
         error_log_lines,
         read_event_docs,
         v1_rows,
-        v2_rows,
+        v2_metadata_rows,
+        v2_payload_rows,
     )
     from local_etl_spark.etl.schema_translate import load_schema
 
@@ -443,9 +443,8 @@ def test_classify_and_renders_stay_codegen_compiled(etl_run, spark):
                 spark.conf.set("spark.sql.codegen.wholeStage", "false")
                 try:
                     v1_rows(classified, schema).collect()
-                    payload, metadata = v2_rows(classified, schema)
-                    payload.collect()
-                    metadata.collect()
+                    v2_payload_rows(classified, schema).collect()
+                    v2_metadata_rows(classified, schema).collect()
                 finally:
                     spark.conf.set("spark.sql.codegen.wholeStage", "true")
                 error_log_lines(

@@ -22,7 +22,7 @@ except ImportError:  # pragma: no cover
 from pyspark.sql import functions as F
 
 from local_etl_spark.etl.schema_translate import load_schema
-from local_etl_spark.etl.validate import _pythonize_message, compile_validity
+from local_etl_spark.etl.pipeline import classify
 
 USERS_SCHEMA = "/root/reference/user-events-schema.json"
 CARDS_SCHEMA = "/root/reference/card-events-schema.json"
@@ -44,21 +44,12 @@ def _drop(d: dict, k: str) -> dict:
     return {x: v for x, v in d.items() if x != k}
 
 
-def _staged_messages(df, val):
-    """classify()'s staging discipline for finished messages: bind the
-    raw message and its float-head token as attributes one select
-    below _pythonize_message (validate.py's documented contract). The
-    token-less one-select form embeds the when-chain ~45x and costs
-    ~24 s of plan work per schema at 8 threads (minutes at local[32])
-    — measured round 8."""
-    from local_etl_spark.etl.validate import float_head_token
-
-    m0 = df.select(val.is_valid.alias("ok"), val.error_msg.alias("m0"))
-    m1 = m0.select(
-        "ok", "m0", float_head_token(F.col("m0")).alias("tok")
-    )
-    return m1.select(
-        "ok", _pythonize_message(F.col("m0"), F.col("tok")).alias("msg")
+def _staged_messages(df, schema):
+    """Finished messages and validity bits through classify(), the one
+    place the staged validity plan is bound (leaves → slot → offender
+    → message → float token → finish; validate.Validity)."""
+    return classify(df, schema).select(
+        F.col("is_valid").alias("ok"), F.col("error_msg").alias("msg")
     )
 
 
@@ -115,18 +106,7 @@ def test_validity_matches_jsonschema(spark, schema_path, md, pl):
     df = spark.createDataFrame([(r,) for r in raws], ["raw"]).select(
         "raw", F.try_parse_json("raw").alias("v")
     )
-    val = compile_validity(schema, F.col("v"))
-    # Validity.error_msg is pre-finish text (Java float heads, raw JSON
-    # container heads); _pythonize_message is the documented finisher
-    # classify() applies before the message reaches any sink.
-    # STAGED shape (round-8 finding): the token-less one-select form
-    # embeds the giant when-chain ~45x at Column-construction time
-    # (msg referenced by the head gate + container rewrite + the ~40
-    # token references in _py_float_text) — measured 24 s of
-    # catalyst/codegen work per fresh plan at 8 threads and MINUTES at
-    # local[32]; binding msg+token one select below is the documented
-    # production discipline and drops it to ~1 s.
-    got = _staged_messages(df, val).collect()
+    got = _staged_messages(df, schema).collect()
 
     for raw, (exp_ok, exp_msg), row in zip(raws, expected, got):
         assert row["ok"] == exp_ok, f"validity mismatch for {raw}: {row['msg']!r}"
@@ -141,8 +121,9 @@ def test_corrupt_json_classifies(spark):
     df = spark.createDataFrame([("{not valid json",)], ["raw"]).select(
         F.try_parse_json("raw").alias("v")
     )
-    val = compile_validity(schema, F.col("v"))
-    row = df.select(val.error_class.alias("c"), val.is_valid.alias("ok")).collect()[0]
+    row = classify(df, schema).select(
+        F.col("error_class").alias("c"), F.col("is_valid").alias("ok")
+    ).collect()[0]
     assert row["c"] == "corrupt" and not row["ok"]
 
 
@@ -294,8 +275,7 @@ def test_multi_error_best_match_sweep(spark, schema_path, md, pl):
     df = spark.createDataFrame([(r,) for r in raws], ["raw"]).select(
         "raw", F.try_parse_json("raw").alias("v")
     )
-    val = compile_validity(schema, F.col("v"))
-    got = _staged_messages(df, val).collect()
+    got = _staged_messages(df, schema).collect()
     n_invalid = sum(1 for ok, _ in expected if not ok)
     assert n_invalid >= 250  # the sweep mostly lands invalid docs
     for raw, (exp_ok, exp_msg), row in zip(raws, expected, got):
@@ -340,7 +320,6 @@ def test_bare_nan_sentinel_direct_collision_divergence(spark):
     df = spark.createDataFrame([(raw,)], ["raw"]).select(
         F.try_parse_json("raw").alias("v")
     )
-    val = compile_validity(schema, F.col("v"))
-    row = _staged_messages(df, val).collect()[0]
+    row = _staged_messages(df, schema).collect()[0]
     assert row["ok"] is False
     assert row["msg"] == "nan is not of type 'string'"
