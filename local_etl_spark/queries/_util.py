@@ -14,6 +14,8 @@ silently rounds, which would break engine parity.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -187,3 +189,125 @@ def _ntile_from_rank(rank_col: str, n: int, k: int) -> Column:
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Shorthand testdata table loader."""
     return table(spark, sf_dir, name)
+
+
+# Connected components run on the driver below this many DIRECTED pair
+# rows (twice the undirected pair count): the pair list is a sketch or
+# forest OUTPUT, model-sized at every shipped scale, and one collect
+# plus numpy beats a loop of distributed rounds. Above it the
+# distributed hash-to-min loop runs.
+CC_DRIVER_MAX_PAIRS = 2_000_000
+
+
+def min_labels(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
+    """Component labels of nodes 0..n-1 under the undirected edges
+    (a[i], b[i]): label = least node index of the component.
+
+    Vectorized union-find: every root that still has a cross edge
+    hooks onto the least root across its edges, then pointer jumping
+    flattens the forest. Pointers only point down, so no cycle forms,
+    and each round lowers the label sum, so the loop ends. A root that
+    neither hooks nor is hooked onto in one round sees only smaller
+    neighbour roots in the next and hooks then, so the count of roots
+    with a cross edge halves every two rounds: O(log n) rounds of
+    O(n + len(a)) numpy work, no Python loop over nodes."""
+    lab = np.arange(n, dtype=np.int64)
+    while True:
+        la, lb = lab[a], lab[b]
+        cross = la != lb
+        if not cross.any():
+            return lab
+        la, lb = la[cross], lb[cross]
+        np.minimum.at(lab, np.maximum(la, lb), np.minimum(la, lb))
+        while True:
+            up = lab[lab]
+            if np.array_equal(up, lab):
+                break
+            lab = up
+
+
+def components(pairs: DataFrame) -> DataFrame:
+    """Connected components of the undirected graph whose edges are the
+    rows of the two-column frame ``pairs``: one (id, label, size) row
+    per node that appears in a pair, label = least id of its component
+    and size = its node count. Keys may be of any orderable type shared
+    by both columns (bigint doc ids, string node names); nodes in no
+    pair are the caller's to add.
+
+    Below CC_DRIVER_MAX_PAIRS directed pairs (so never when it is 0)
+    the pairs are collected once and labelled by min_labels (ids
+    factorized in sorted order, so the least index is the least id);
+    otherwise _hash_to_min runs. Either way the pair cache is released
+    before return."""
+    spark = pairs.sparkSession
+    a, b = pairs.columns
+    pairs = pairs.persist()
+    try:
+        n_pairs = pairs.count()
+        if 2 * n_pairs >= CC_DRIVER_MAX_PAIRS:
+            return _hash_to_min(pairs.toDF("src", "dst"))
+        pdf = pairs.toPandas()
+    finally:
+        pairs.unpersist()
+    codes, ids = pd.factorize(
+        np.concatenate([pdf[a].to_numpy(), pdf[b].to_numpy()]), sort=True
+    )
+    lab = min_labels(codes[:n_pairs], codes[n_pairs:], len(ids))
+    key = pairs.schema[a].dataType.simpleString()
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {"id": ids, "label": ids[lab], "size": np.bincount(lab)[lab]}
+        ),
+        f"id {key}, label {key}, size bigint",
+    )
+
+
+def _hash_to_min(pairs: DataFrame) -> DataFrame:
+    """Distributed tier of components() over a persisted (src, dst)
+    pair list: every node takes the least label among itself and its
+    neighbours until no label moves. Labels stop moving after at most
+    diameter ≤ node-count − 1 rounds, so a loop still moving after
+    node-count + 1 rounds raises instead of returning unconverged
+    labels. Each round is localCheckpoint()ed (the join plan would
+    otherwise double per round) and the previous one freed; the last
+    round backs the returned frame."""
+    edges = pairs.unionAll(pairs.select("dst", "src")).persist()
+    try:
+        state = (
+            edges.select(F.col("src").alias("id"))
+            .distinct()
+            .select("id", F.col("id").alias("label"))
+            .localCheckpoint()
+        )
+        for _ in range(state.count() + 1):
+            neigh = (
+                edges.join(state, edges.dst == state.id)
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.min("label").alias("nlabel"))
+            )
+            new = (
+                state.join(neigh, "id")
+                .select(
+                    "id",
+                    F.least("label", "nlabel").alias("label"),
+                    (F.col("nlabel") < F.col("label")).alias("moved"),
+                )
+                .localCheckpoint()
+            )
+            # free the previous round: DataFrame.unpersist() only
+            # reaches the cache manager, not a local checkpoint's blocks
+            state._jdf.queryExecution().logical().rdd().unpersist(False)
+            state = new
+            if state.filter("moved").count() == 0:
+                break
+        else:
+            raise RuntimeError(
+                "components: labels still moving after node-count rounds"
+            )
+    finally:
+        edges.unpersist()
+    return state.select(
+        "id",
+        "label",
+        F.count(F.lit(1)).over(Window.partitionBy("label")).alias("size"),
+    )

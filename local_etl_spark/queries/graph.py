@@ -3,8 +3,8 @@
 The supplier↔customer trade graph: an undirected edge for every
 (supplier, customer) pair that traded, weighted by line revenue.
 PageRank over it ranks entities by recursive trade centrality — the
-classic iterative-algorithm shape (cf. llm_dedup_cluster's label
-propagation for connected components).
+classic iterative-algorithm shape (cf. the connected-components
+operator, queries/_util.components).
 
 Scale notes: the edge list is built with ONE aggregation over the
 lineitem-orders join and persisted; each PageRank iteration is one
@@ -23,7 +23,12 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from local_etl_spark.queries._util import ordered_prefix, t
+from local_etl_spark.queries._util import (
+    components,
+    min_labels,
+    ordered_prefix,
+    t,
+)
 from local_etl_spark.registry import query
 
 
@@ -2295,8 +2300,9 @@ def graph_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Borůvka minimum spanning forest (round 13) --------------------------
 
-MST_ROUNDS = 8  # Borůvka rounds unrolled in the oracle (measured
-# fixpoint 3/4/6 at sf0.001/0.01/0.1 — margin ≥ 2, pytest-pinned)
+MST_ROUNDS = 8  # Borůvka rounds unrolled in the ORACLE only (measured
+# fixpoint 3/4/6 at sf0.001/0.01/0.1 — margin ≥ 2, pytest-pinned); the
+# engine loops run to their fixpoint under _boruvka_cap
 MST_CC_ITERS = 34  # per-round CC Jacobi iterations in the oracle
 # (measured max 27 at sf0.1 — margin 7, pytest-pinned)
 # numpy-tier gate (the graph_pagerank PR_LOCAL_MAX_EDGES shape): below
@@ -2311,11 +2317,15 @@ MST_CC_ITERS = 34  # per-round CC Jacobi iterations in the oracle
 # off and asserts row equality.
 MST_LOCAL_MAX_EDGES = _env_int("SPARK_GRAFT_MST_LOCAL_MAX_EDGES", 8_000_000)
 
-MST_UF_MAX_EDGES = 2_000_000  # forest-labelling gate inside the
-# distributed loop (_forest_components): the accumulated forest is
-# NODE-sized (≤ V−1 edges), so below this it collects for a driver
-# union-find; above, the distributed Jacobi min-label loop runs. Both
-# sides are pytest-forced row-identical.
+_BORUVKA_CAP_MSG = "graph_mst: cross edges left after ⌈log2 V⌉ + 1 rounds"
+
+
+def _boruvka_cap(n_nodes: int) -> int:
+    """Loop bound of both graph_mst tiers: every component with a cross
+    edge merges each round, so those components at least halve and
+    ⌈log2 V⌉ selecting rounds reach the fixpoint; the round after them
+    finds no cross edge. A loop that exhausts the cap raises."""
+    return (n_nodes - 1).bit_length() + 1
 
 
 def _mst_oracle() -> str:
@@ -2417,20 +2427,22 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
     provably equals Kruskal (pytest replays an independent union-find
     Kruskal plus a networkx total-weight check). Selected edges
     accumulate; components are the connected components of the
-    accumulated forest. Components at least halve per round —
-    measured fixpoint 3/4/6 rounds at the three SFs (≤ MST_ROUNDS−2,
-    margin-pinned).
+    accumulated forest. Components at least halve per round, so both
+    tiers loop until no cross edge is left and raise past ⌈log2 V⌉ + 1
+    rounds (_boruvka_cap); the shipped SFs reach the fixpoint in
+    3/4/6 rounds, inside the oracle's MST_ROUNDS unroll
+    (margin-pinned).
 
     Scale: below MST_LOCAL_MAX_EDGES the whole loop replays in numpy
     off one Arrow collect. Above it, the per-round cost is ONE join of
     the (persisted) edge relation against the node-sized component
     map plus one per-component argmin — both key on node/component
     ids, the map-side-combinable shape; the edge relation never
-    rewrites. The accumulated forest is NODE-sized (≤ V−1 edges), so
-    its component labels (_forest_components) come from an exact
-    driver union-find below MST_UF_MAX_EDGES and from a distributed
-    min-label loop above it (labels are partition-invariant, so both
-    agree bit-for-bit — pytest forces each gate to 0).
+    rewrites. The accumulated forest is NODE-sized (≤ V−1 edges); its
+    component labels come from the shared components operator (its
+    CC_DRIVER_MAX_PAIRS gate picks the tier; labels are
+    partition-invariant, so every tier agrees bit-for-bit — pytest
+    forces each gate to 0).
     Deterministic: integers and strings end to end, no floats
     anywhere."""
     # r13 optimization (the graph_pagerank shape): one persisted
@@ -2470,8 +2482,8 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r14 tier (see MST_LOCAL_MAX_EDGES): one Arrow collect of the
         # INT columns only, then the SAME Borůvka rounds —
         # per-component argmin over cross edges, both component sides,
-        # same-edge-picked-twice dedup, driver union-find — entirely
-        # in numpy/Python. The (w, u, v) total order is encoded ONCE
+        # same-edge-picked-twice dedup, forest labels by min_labels —
+        # entirely in numpy. The (w, u, v) total order is encoded ONCE
         # as a global integer edge rank: string order of 'c<digits>'
         # names is reproduced by the exact integer key _dec_key
         # (pytest-pinned against str sort), edges are lexsorted once
@@ -2487,12 +2499,19 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
         uiA = pdf["ui"].to_numpy(np.int64)
         viA = pdf["vi"].to_numpy(np.int64)
         we = pdf["w"].to_numpy(np.int64)
-        # hash-based node indexing (see graph_pagerank)
+        # hash-based node indexing (see graph_pagerank), then renumbered
+        # in NAME order — 'c…' (odd id) before 's…', each by _dec_key —
+        # so min_labels' least index is the least member name
         codes, uniq = pd.factorize(np.concatenate([uiA, viA]))
+        uniq = np.asarray(uniq, np.int64)
+        by_name = np.argsort(
+            _dec_key(uniq // 2) + (uniq % 2 == 0) * (np.int64(1) << 60)
+        )
+        ids = uniq[by_name]
+        pos = np.empty_like(by_name)
+        pos[by_name] = np.arange(by_name.size)
         ne = len(we)
-        uix = codes[:ne]
-        vix = codes[ne:]
-        ids = np.asarray(uniq, np.int64)
+        uix, vix = pos[codes[:ne]], pos[codes[ne:]]
         nn = int(ids.size)
         # global edge rank under (w, u, v): u is always 'c<k>' and v
         # always 's<k>', so within each column the string order is the
@@ -2500,21 +2519,10 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
         o = np.lexsort((_dec_key(viA // 2), _dec_key(uiA // 2), we))
         edge_rank = np.empty(o.size, np.int64)
         edge_rank[o] = np.arange(o.size)
-        rank2edge = o
-        iparent = list(range(nn))
-
-        def ifind(x: int) -> int:
-            while iparent[x] != x:
-                iparent[x] = iparent[iparent[x]]
-                x = iparent[x]
-            return x
-
         big = np.int64(o.size)
-        sel_idx: list[int] = []
-        for _ in range(MST_ROUNDS):
-            comp = np.fromiter(
-                (ifind(k) for k in range(nn)), np.int64, nn
-            )
+        sel = np.empty(0, np.int64)
+        comp = np.arange(nn)
+        for _ in range(_boruvka_cap(nn)):
             cu, cv = comp[uix], comp[vix]
             m = cu != cv
             if not m.any():
@@ -2523,49 +2531,27 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
             er = edge_rank[m]
             np.minimum.at(best, cu[m], er)
             np.minimum.at(best, cv[m], er)
-            win = np.unique(best[best < big])  # both-sides dedup
-            edges_w = rank2edge[win]
-            sel_idx.extend(edges_w.tolist())
-            for i in edges_w.tolist():
-                ra, rb = ifind(int(uix[i])), ifind(int(vix[i]))
-                if ra != rb:
-                    iparent[ra] = rb
-        if not sel_idx:
-            return spark.createDataFrame(
-                [], "u string, v string, w bigint, component string"
-            )
-        # component label = lexicographically least member NAME; the
-        # per-node name key gives the min via exact integer compare
-        nkey = np.where(
-            ids % 2 == 1,  # odd = customer 'c…' < supplier 's…'
-            _dec_key(ids // 2),
-            _dec_key(ids // 2) + (np.int64(1) << 60),
-        )
-        min_key: dict[int, int] = {}
-        min_node: dict[int, int] = {}
-        for k in range(nn):
-            r = ifind(k)
-            kk = int(nkey[k])
-            if r not in min_key or kk < min_key[r]:
-                min_key[r] = kk
-                min_node[r] = k
-        def _nm(i: int) -> str:
-            return ("c" if i % 2 else "s") + str(i // 2)
+            # both-sides dedup: an edge picked by both its components
+            sel = np.concatenate([sel, o[np.unique(best[best < big])]])
+            comp = min_labels(uix[sel], vix[sel], nn)
+        else:
+            raise RuntimeError(_BORUVKA_CAP_MSG)
 
-        lab_of_root = {r: _nm(int(ids[k])) for r, k in min_node.items()}
+        def names(i: np.ndarray) -> np.ndarray:
+            return np.char.add(
+                np.where(i % 2 == 1, "c", "s"), (i // 2).astype(str)
+            )
+
         return spark.createDataFrame(
             pd.DataFrame(
                 {
-                    "u": [_nm(int(uiA[i])) for i in sel_idx],
-                    "v": [_nm(int(viA[i])) for i in sel_idx],
-                    "w": [int(we[i]) for i in sel_idx],
-                    "component": [
-                        lab_of_root[ifind(int(uix[i]))] for i in sel_idx
-                    ],
+                    "u": names(uiA[sel]),
+                    "v": names(viA[sel]),
+                    "w": we[sel],
+                    "component": names(ids[comp[uix[sel]]]),
                 }
-            )
-        ).select(
-            "u", "v", F.col("w").cast("bigint").alias("w"), "component"
+            ),
+            "u string, v string, w bigint, component string",
         )
     # distributed loop (> MST_LOCAL_MAX_EDGES): string relations
     # derived from the pair cache
@@ -2588,7 +2574,7 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pagerank broadcast gate — below it the edge relation never
     # shuffles for the component join
     sel: DataFrame | None = None  # selected-forest accumulator
-    for _ in range(MST_ROUNDS):
+    for _ in range(_boruvka_cap(n_nodes)):
         cu = comp.withColumnRenamed("node", "u").withColumnRenamed(
             "lab", "cu"
         )
@@ -2625,112 +2611,16 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
         sel = (
             mins if sel is None else sel.unionAll(mins).distinct()
         ).localCheckpoint()
-        comp = _forest_components(spark, nodes, sel, comp)
-    if sel is None:
-        return spark.createDataFrame(
-            [], "u string, v string, w bigint, component string"
+        # every node is in the forest from round 1 on (each singleton
+        # picks an edge), so the forest's labels cover the whole map
+        comp = components(sel.select("u", "v")).select(
+            F.col("id").alias("node"), F.col("label").alias("lab")
         )
+    else:
+        raise RuntimeError(_BORUVKA_CAP_MSG)
     return sel.join(
         comp.withColumnRenamed("node", "u").withColumnRenamed(
             "lab", "component"
         ),
         "u",
     ).select("u", "v", "w", "component")
-
-
-def _forest_components(
-    spark: SparkSession,
-    nodes: DataFrame,
-    forest: DataFrame,
-    warm: DataFrame,
-    uf_max_edges: int | None = None,
-) -> DataFrame:
-    """Exact CC min-labels of the accumulated forest — the graph_mst
-    gate: driver union-find below uf_max_edges (the forest is
-    node-sized; an entity-scale collect like pagerank's gated rank
-    broadcast), distributed Jacobi min-label + pointer-jump loop
-    above it (converges in O(log · diameter) small jobs; warm-started
-    from the previous round's labels, localCheckpoint per iteration).
-    Both paths compute the same partition with min labels, so results
-    are identical — only the access path differs."""
-    if uf_max_edges is None:  # resolved at call time: patchable in tests
-        uf_max_edges = MST_UF_MAX_EDGES
-    n_forest = forest.count()
-    if n_forest <= uf_max_edges:
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        rows = forest.select("u", "v").collect()
-        for r in rows:
-            parent.setdefault(r["u"], r["u"])
-            parent.setdefault(r["v"], r["v"])
-        for r in rows:
-            ru, rv = find(r["u"]), find(r["v"])
-            if ru != rv:
-                parent[ru] = rv
-        groups: dict[str, list[str]] = {}
-        for n in parent:
-            groups.setdefault(find(n), []).append(n)
-        lab = {}
-        for g in groups.values():
-            m = min(g)
-            for n in g:
-                lab[n] = m
-        labeled = spark.createDataFrame(
-            list(lab.items()), "node string, lab string"
-        )
-        return (
-            nodes.join(labeled, "node", "left")
-            .select(
-                "node",
-                F.coalesce("lab", F.col("node")).alias("lab"),
-            )
-            .localCheckpoint()
-        )
-    # Neighbor-min propagation ONLY (the proven _min_label_components
-    # shape, warm-started so propagation crosses just the newly merged
-    # boundaries — measured convergence ≤ 9 iterations/round even on
-    # the final single-component forest). A pointer-jump variant
-    # (lab JOIN lab-projection ON lab.lab = jump.jn) was measured to
-    # slow down GEOMETRICALLY (~×2.5 per iteration, 0.5 s → 159 s by
-    # iteration 8) despite localCheckpoint on every frame — a DF
-    # self-join against its own projection defeats the checkpoint's
-    # lineage cut; never use that shape in an iterative loop.
-    # Pathological diameters would call for large-star/small-star
-    # (same join primitives, provably O(log n) rounds).
-    sym = forest.select(
-        F.col("u").alias("n"), F.col("v").alias("o")
-    ).unionAll(forest.select(F.col("v").alias("n"), F.col("u").alias("o")))
-    sym = sym.localCheckpoint()
-    lab = warm
-    for _ in range(400):  # safety cap far above measured ≤ 9
-        neigh = (
-            sym.join(lab.withColumnRenamed("node", "o"), "o")
-            .groupBy(F.col("n").alias("node"))
-            .agg(F.min("lab").alias("nlab"))
-        )
-        new = (
-            lab.join(neigh, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("lab"), F.coalesce("nlab", F.col("lab"))
-                ).alias("lab"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new.alias("a")
-            .join(lab.alias("b"), "node")
-            .filter(F.col("a.lab") != F.col("b.lab"))
-            .count()
-        )
-        lab = new
-        if changed == 0:
-            break
-    return lab

@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from local_etl_spark.queries._util import t
+from local_etl_spark.queries._util import components, t
 from local_etl_spark.queries.llm_sim import _duck_cosine, dot
 from local_etl_spark.registry import query
 
@@ -949,149 +949,19 @@ def _embed_pairs_cell_blocked(
 
 
 
-# r13: below this many (symmetric) pair rows the connected-components
-# labels are computed by driver-side union-find — the pair list is the
-# SKETCH OUTPUT (near-dup pairs), not the corpus, so at every shipped
-# scale it is model-sized; the distributed hash-to-min loop remains
-# the past-gate fallback.
-CC_DRIVER_MAX_PAIRS = 2_000_000
-
-
-def _components_local(pairs: DataFrame) -> dict | None:
-    """Driver-side exact union-find over a pair list, or None past the
-    CC_DRIVER_MAX_PAIRS gate. Returns {doc_id: label} with label =
-    min(doc_id) of the component — identical by construction to the
-    distributed hash-to-min loop (pure integer set semantics, no
-    ordering or float concerns).
-
-    (A limit(cap+1)-collect single-job probe was tried in r14 and
-    REVERTED: CollectLimit executes incrementally — 1, then 4, then 16
-    partitions — so it cost FOUR jobs here where count + collect cost
-    two.)
-
-    Persist contract (ADVICE r13): this fn persists ``pairs`` before
-    probing (the probe count doubles as the cache fill). On the
-    UNDER-gate return the cache is released here. On the None return
-    the cache is LEFT LIVE deliberately — every caller hands the same
-    ``pairs`` to _distributed_components, whose union children read
-    the cache instead of re-executing the sketch pipeline, and which
-    unpersists it when the loop finishes."""
-    pairs = pairs.persist()
-    n_pairs = pairs.count()
-    if 2 * n_pairs > CC_DRIVER_MAX_PAIRS:
-        return None
-    plist = [(row.d1, row.d2) for row in pairs.collect()]
-    pairs.unpersist()
-    parent: dict = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in plist:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    comp_min: dict = {}
-    for x in parent:
-        r = find(x)
-        comp_min[r] = min(comp_min.get(r, x), x)
-    return {x: comp_min[find(x)] for x in parent}
-
-
-def _min_label_components(pairs: DataFrame) -> DataFrame:
-    """Connected components over an undirected pair list via iterative
-    min-label propagation (hash-to-min): (doc_id, label) for every doc
-    appearing in a pair, label = min doc_id of its component.
-
-    Each doc starts labeled with its own id; every round each doc takes
-    the min label in its neighborhood; converges in O(component
-    diameter) rounds. The loop is driver-COORDINATED but all data
-    motion is distributed joins — nothing is collected. Near-dup
-    components are overwhelmingly small/star-shaped (diameter ≤ ~3), so
-    3-5 rounds close 100 TB-scale graphs; pathological chains would
-    call for the large-star/small-star algorithm (same join primitives,
-    provably O(log n) rounds). localCheckpoint() per round truncates
-    the plan lineage — without it the iteration re-executes every prior
-    round each time (exponential plan growth).
-    """
-    # r13 optimization (the graph-family driver gate): the verified
-    # near-dup PAIR LIST is sketch-bounded and overwhelmingly smaller
-    # than the corpus — when it is model-sized, collect it and run
-    # exact union-find on the driver instead of paying up to 8×2 tiny
-    # jobs of label propagation (identical by construction — see
-    # _components_local). Past the gate the distributed hash-to-min
-    # loop below runs unchanged (the 100 TB shape for a pair list that
-    # outgrows the driver).
-    local = _components_local(pairs)
-    if local is not None:
-        return _local_labels_df(pairs.sparkSession, local)
-    return _distributed_components(pairs)
-
-
-def _local_labels_df(spark: SparkSession, local: dict) -> DataFrame:
-    """(doc_id, label) DataFrame from a driver union-find dict."""
-    import pandas as pd
-
-    if not local:
-        return spark.createDataFrame([], "doc_id bigint, label bigint")
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {"doc_id": list(local), "label": list(local.values())}
-        )
+def _clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``docs`` plus each doc's near-dup cluster: cluster_id = least
+    doc_id of its connected component in the (d1, d2) pair graph and
+    cluster_size = its member count; an unpaired doc is its own
+    cluster of size 1. On the driver tier the component frame is a
+    local relation, which the planner broadcasts, so the attach costs
+    no corpus shuffle."""
+    cc = components(pairs).withColumnRenamed("id", "doc_id")
+    return docs.join(cc, "doc_id", "left").select(
+        *docs.columns,
+        F.coalesce("label", "doc_id").alias("cluster_id"),
+        F.coalesce("size", F.lit(1)).cast("bigint").alias("cluster_size"),
     )
-
-
-def _distributed_components(pairs: DataFrame) -> DataFrame:
-    """Distributed hash-to-min label propagation over a PERSISTED pair
-    list (the >CC_DRIVER_MAX_PAIRS regime). Callers reach this only
-    after _components_local returned None, which leaves ``pairs``
-    persisted — the two union children below read that cache rather
-    than re-executing the sketch pipeline; the cache (and the derived
-    edge cache) are released here once the labels are materialized
-    (localCheckpoint is eager), closing the r13-ADVICE cache leak."""
-    # symmetric edge list; isolated docs join in via the caller's union
-    edges = pairs.union(
-        pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
-    ).persist()
-    labels = (
-        edges.select(F.col("d1").alias("doc_id"))
-        .distinct()
-        .select("doc_id", F.col("doc_id").alias("label"))
-        .localCheckpoint()
-    )
-    for _ in range(8):  # diameter bound; early-exits on convergence
-        neigh = (
-            edges.join(labels, edges.d2 == labels.doc_id)
-            .groupBy(edges.d1.alias("doc_id"))
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new_labels = (
-            labels.join(neigh, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce("nlabel", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    pairs.unpersist()
-    return labels
 
 
 @query(
@@ -1127,11 +997,12 @@ def llm_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the step that turns PAIRS into an actual dedup decision —
     transitive closure matters because near-dup is not transitive at
     the pair level (A~B, B~C does not imply A~C scores above τ, yet
-    all three are one duplicate group). Components via
-    _min_label_components (min-label propagation, see its docstring).
+    all three are one duplicate group). Components via _clusters
+    (the shared components operator, run to its fixpoint on either
+    tier).
 
-    SQL-oracled since round 7 (was rows-only): the iterative Spark loop
-    is matched by a DuckDB recursive-CTE reachability closure over the
+    SQL-oracled since round 7 (was rows-only): the component labels
+    are matched by a DuckDB recursive-CTE reachability closure over the
     same exact n-gram pair graph (the graph_bfs UNION-dedup pattern —
     the recursion's working set stays component-sized), min(reachable)
     per doc ≡ the converged min-label. tests/test_llm_dedup.py
@@ -1143,16 +1014,13 @@ def llm_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_llm_dedup.py::test_e2e_oracle_assumptions so a corpus
     change fails loudly instead of as an oracle mismatch.
     """
-    pairs = llm_dedup_ngram(spark, sf_dir).select("d1", "d2")
-    labels = _min_label_components(pairs)
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-    return (
-        docs.join(labels, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("label", "doc_id").alias("cluster_id"),
-        )
-        .withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
+    return _clusters(
+        t(spark, sf_dir, "documents").select("doc_id"),
+        llm_dedup_ngram(spark, sf_dir).select("d1", "d2"),
+    ).select(
+        "doc_id",
+        "cluster_id",
+        (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
     )
 
 
@@ -1192,7 +1060,7 @@ def llm_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end production dedup (the Lee et al. "Deduplicating
     Training Data" shape) as ONE op: MinHash-LSH candidate pairs →
     exact-Jaccard verify (both inside llm_dedup_minhash) → connected
-    components (_min_label_components) → keep min(doc_id) per cluster.
+    components (_clusters) → keep min(doc_id) per cluster.
     Per doc: its cluster, whether it is the KEPT canonical, and the
     cluster size (the dedup ratio witness — Σ(kept)/count(*) is the
     survival rate).
@@ -1205,11 +1073,10 @@ def llm_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     testdata), so the sketch path and the exact witness agree — which
     is precisely the production claim this op exists to demonstrate.
 
-    Scale: pairs/components as in llm_dedup_minhash/llm_dedup_cluster
-    (keys-only band joins, capped buckets, O(diameter) label rounds);
-    the size attach is a groupBy + co-partitioned join on cluster_id
-    (sort-free, unlike a count-over-window), and everything after the
-    pair stage is pair/doc-sized.
+    Scale: pairs as in llm_dedup_minhash (keys-only band joins, capped
+    buckets); cluster ids and sizes both come from the components
+    operator, so everything after the pair stage is one join of the
+    corpus against the pair-sized component frame.
 
     Corpus-property assumptions the oracle equality rests on (both
     pinned by tests/test_llm_dedup.py::test_e2e_oracle_assumptions at
@@ -1218,72 +1085,10 @@ def llm_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2) max shingle df stays under DF_CAP, so the engine's df-cap —
     absent from this oracle — is inert.
     """
-    pairs = llm_dedup_minhash(spark, sf_dir).select("d1", "d2")
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-    # r13 optimization: under the CC driver gate the cluster SIZES are
-    # derivable from the label dict alone — paired clusters' sizes are
-    # member counts of the (model-sized) dict, and every unpaired doc
-    # is a singleton with cluster_id = doc_id, size 1 (an unpaired
-    # doc's id can never equal a paired cluster's id: the cluster id
-    # is the min MEMBER). The whole op becomes ONE map-side broadcast
-    # join over the corpus — zero post-sketch shuffles (was: persist +
-    # size aggregate + cluster-keyed join).
-    local = _components_local(pairs)
-    if local is not None:
-        import pandas as pd
-        from collections import Counter
-
-        csize = Counter(local.values())
-        info = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "doc_id": list(local),
-                    "cluster_id": list(local.values()),
-                    "cluster_size": [
-                        csize[label] for label in local.values()
-                    ],
-                }
-            )
-        ) if local else None
-        if info is None:
-            return docs.select(
-                "doc_id",
-                F.col("doc_id").alias("cluster_id"),
-                F.lit(True).alias("kept"),
-                F.lit(1).cast("bigint").alias("cluster_size"),
-            )
-        return docs.join(F.broadcast(info), "doc_id", "left").select(
-            "doc_id",
-            F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
-            (
-                F.col("doc_id")
-                == F.coalesce("cluster_id", F.col("doc_id"))
-            ).alias("kept"),
-            F.coalesce("cluster_size", F.lit(1))
-            .cast("bigint")
-            .alias("cluster_size"),
-        )
-    # past the gate: _components_local already probed AND persisted
-    # pairs — go straight to the distributed loop (r14, VERDICT r13
-    # what's-wrong #4: the old _min_label_components call re-ran the
-    # persist+count probe, one extra job per over-gate invocation)
-    labels = _distributed_components(pairs)
-    # persist: assign feeds the size aggregate AND the final join.
-    # Intentionally NOT unpersisted — the returned DataFrame's plan
-    # references the cached relation and the caller collects after we
-    # return (repo persist-leak convention, r4); doc-count-sized.
-    assign = (
-        docs.join(labels, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("label", F.col("doc_id")).alias("cluster_id"),
-        )
-        .persist()
-    )
-    sizes = assign.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cluster_size")
-    )
-    return assign.join(sizes, "cluster_id").select(
+    return _clusters(
+        t(spark, sf_dir, "documents").select("doc_id"),
+        llm_dedup_minhash(spark, sf_dir).select("d1", "d2"),
+    ).select(
         "doc_id",
         "cluster_id",
         (F.col("doc_id") == F.col("cluster_id")).alias("kept"),
@@ -1360,127 +1165,22 @@ def llm_softdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (LSH miss band empty, df-cap inert — pinned by
     tests/test_llm_dedup.py::test_e2e_oracle_assumptions) carry over.
 
-    Scale: everything downstream of the pair stage is doc-sized; the
-    token attach is a broadcast-sized dimension join and the cluster
-    rollup reuses the cluster_id partitioning of the size attach.
+    Scale: everything downstream of the pair stage is doc-sized:
+    cluster ids and sizes come from _clusters, and cluster_tokens is
+    one window sum over cluster_id — a doc-sized shuffle of four
+    integer columns, on either components tier.
     """
     tok = t(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
     )
-    # r13 optimization (the llm_dedup_e2e driver-gate shape): under
-    # the CC gate, per-cluster token sums only need the PAIRED docs'
-    # token counts (model-sized collect — singletons carry their own
-    # n_tokens map-side), so the whole op after the sketch is ONE
-    # broadcast join over the corpus: no cluster-keyed shuffle, no
-    # doc-sized join. Integer token sums move to exact Python ints
-    # (order-free, identical); every float stays a Spark expression.
-    pairs = llm_dedup_minhash(spark, sf_dir).select("d1", "d2")
-    local = _components_local(pairs)
-    if local is not None:
-        import pandas as pd
-        from collections import Counter
-
-        csize = Counter(local.values())
-        if local:
-            # r14 (VERDICT r13 what's-wrong #3): the collect is
-            # per-CLUSTER token sums — component-count-sized — not the
-            # per-doc token counts of every paired doc (≤ 2× the pair
-            # gate, a hundreds-of-MB dict at the boundary). The sums
-            # are exact BIGINT aggregates, order-free and identical to
-            # the Python accumulation they replace.
-            lab_df = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "doc_id": list(local),
-                        "cluster_id": list(local.values()),
-                    }
-                )
-            )
-            ctok = {
-                row.cluster_id: row.ct
-                for row in tok.join(F.broadcast(lab_df), "doc_id")
-                .groupBy("cluster_id")
-                .agg(F.sum("n_tokens").cast("bigint").alias("ct"))
-                .collect()
-            }
-            info = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "doc_id": list(local),
-                        "cluster_id": list(local.values()),
-                        "cluster_size": [
-                            csize[label] for label in local.values()
-                        ],
-                        "cluster_tokens": [
-                            ctok[label] for label in local.values()
-                        ],
-                    }
-                )
-            )
-            base = tok.join(F.broadcast(info), "doc_id", "left")
-        else:
-            base = tok.select(
-                "doc_id",
-                "n_tokens",
-                F.lit(None).cast("bigint").alias("cluster_id"),
-                F.lit(None).cast("bigint").alias("cluster_size"),
-                F.lit(None).cast("bigint").alias("cluster_tokens"),
-            )
-        return base.select(
-            "doc_id",
-            F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
-            (
-                F.col("doc_id")
-                == F.coalesce("cluster_id", F.col("doc_id"))
-            ).alias("kept"),
-            F.coalesce("cluster_size", F.lit(1))
-            .cast("bigint")
-            .alias("cluster_size"),
-            (
-                F.round(
-                    F.lit(1.0)
-                    / F.coalesce("cluster_size", F.lit(1)).cast("bigint"),
-                    6,
-                )
-                + 0.0
-            ).alias("weight"),
-            "n_tokens",
-            F.coalesce("cluster_tokens", F.col("n_tokens"))
-            .cast("bigint")
-            .alias("cluster_tokens"),
-            (
-                F.round(
-                    F.coalesce("cluster_tokens", F.col("n_tokens")).cast(
-                        "double"
-                    )
-                    / F.coalesce("cluster_size", F.lit(1)).cast("bigint"),
-                    6,
-                )
-                + 0.0
-            ).alias("cluster_eff_tokens"),
-        )
-    # past the gate (r14, ADVICE r13 low): the old fallback re-invoked
-    # llm_dedup_e2e, which rebuilt the ENTIRE minhash sketch from
-    # scratch while the probe's persisted pair relation sat abandoned
-    # (double sketch cost + a cache leak). Reuse the probed pairs
-    # directly: one distributed label propagation, then sizes + token
-    # sums in ONE cluster-keyed aggregate over the assignment.
-    labels = _distributed_components(pairs)
-    assign = (
-        tok.join(labels, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.coalesce("label", F.col("doc_id")).alias("cluster_id"),
-        )
-        .persist()  # feeds the rollup AND the final join (r4 convention)
+    assign = _clusters(
+        tok, llm_dedup_minhash(spark, sf_dir).select("d1", "d2")
+    ).withColumn(
+        "cluster_tokens",
+        F.sum("n_tokens").over(Window.partitionBy("cluster_id")),
     )
-    cs = assign.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cluster_size"),
-        F.sum("n_tokens").cast("bigint").alias("cluster_tokens"),
-    )
-    return assign.join(cs, "cluster_id").select(
+    return assign.select(
         "doc_id",
         "cluster_id",
         (F.col("doc_id") == F.col("cluster_id")).alias("kept"),

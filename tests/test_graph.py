@@ -568,12 +568,14 @@ def test_mst_equals_kruskal_and_networkx(spark):
 
 
 def test_mst_distributed_fallback_matches_fast_path(spark, monkeypatch):
-    """Force each graph_mst gate to 0 in turn and diff against the
-    default numpy tier: MST_LOCAL_MAX_EDGES=0 runs the distributed
-    Borůvka loop with driver union-find forest labels, and
-    MST_UF_MAX_EDGES=0 as well runs it with distributed Jacobi labels.
-    Rows must be IDENTICAL on every leg (labels are partition-invariant;
-    all legs compute min labels of the same unique forest)."""
+    """Force each gate graph_mst passes through to 0 in turn and diff
+    against the default numpy tier: MST_LOCAL_MAX_EDGES=0 runs the
+    distributed Borůvka loop with driver-tier forest labels, and the
+    shared components gate CC_DRIVER_MAX_PAIRS=0 as well runs it with
+    hash-to-min forest labels. Rows must be IDENTICAL on every leg
+    (labels are partition-invariant; all legs compute min labels of the
+    same unique forest)."""
+    import local_etl_spark.queries._util as U
     import local_etl_spark.queries.graph as G
     from local_etl_spark.registry import get
 
@@ -587,11 +589,54 @@ def test_mst_distributed_fallback_matches_fast_path(spark, monkeypatch):
 
     numpy_tier = rows()
     monkeypatch.setattr(G, "MST_LOCAL_MAX_EDGES", 0)
-    union_find_labels = rows()
-    assert union_find_labels == numpy_tier
-    monkeypatch.setattr(G, "MST_UF_MAX_EDGES", 0)
-    jacobi_labels = rows()
-    assert jacobi_labels == numpy_tier
+    driver_labels = rows()
+    assert driver_labels == numpy_tier
+    monkeypatch.setattr(U, "CC_DRIVER_MAX_PAIRS", 0)
+    hash_to_min_labels = rows()
+    assert hash_to_min_labels == numpy_tier
+
+
+def test_mst_ruler_path_reaches_fixpoint(spark, tmp_path, monkeypatch):
+    """A path of 2^9 + 1 nodes whose edge i weighs tz(i) + 1 cents
+    (tz = trailing zero bits of i): every Borůvka round only pairs up
+    neighbouring components, so the forest needs 9 selecting rounds —
+    a loop stopped after a fixed 8 returns 511 of the 512 edges. Both
+    tiers must return the whole path as the one component c0, with
+    networkx Kruskal's total weight."""
+    import networkx as nx
+    import pandas as pd
+
+    import local_etl_spark.queries.graph as G
+    from local_etl_spark.registry import get
+
+    def name(j):  # node j of the path
+        return ("c" if j % 2 == 0 else "s") + str(j // 2)
+
+    orders, items, g = [], [], nx.Graph()
+    for i in range(1, 2**9 + 1):  # edge i joins nodes i-1 and i
+        cust, supp = (i - 1, i) if i % 2 else (i, i - 1)
+        w = (i & -i).bit_length()  # tz(i) + 1
+        orders.append((i, cust // 2))
+        items.append((i, supp // 2, w / 100))
+        g.add_edge(name(i - 1), name(i), weight=w)
+    pd.DataFrame(orders, columns=["o_orderkey", "o_custkey"]).to_parquet(
+        tmp_path / "orders.parquet"
+    )
+    pd.DataFrame(
+        items, columns=["l_orderkey", "l_suppkey", "l_extendedprice"]
+    ).to_parquet(tmp_path / "lineitem.parquet")
+    want = sum(
+        d["weight"]
+        for _u, _v, d in nx.minimum_spanning_edges(
+            g, algorithm="kruskal", data=True
+        )
+    )
+    for local_max in (G.MST_LOCAL_MAX_EDGES, 0):
+        monkeypatch.setattr(G, "MST_LOCAL_MAX_EDGES", local_max)
+        rows = get("graph_mst").fn(spark, str(tmp_path)).collect()
+        assert len(rows) == 512, local_max
+        assert {r["component"] for r in rows} == {"c0"}, local_max
+        assert sum(r["w"] for r in rows) == want, local_max
 
 
 def test_dec_key_matches_decimal_string_order():

@@ -536,20 +536,17 @@ def test_lsh_cosine_oracle_guards_inert(spark):
 
 
 def test_cc_gate_forced_distributed_parity(spark, monkeypatch):
-    """r14: forcing the CC driver gate to 0 sends e2e / softdedup /
-    cluster down the distributed label-propagation fallback — rows must
-    be IDENTICAL to the driver union-find path (the over-gate regime,
-    previously unreachable at any shipped SF; softdedup's fallback no
-    longer rebuilds the sketch via llm_dedup_e2e, it reuses the probe's
-    persisted pairs and _distributed_components releases that cache
-    when the labels materialize)."""
-    from local_etl_spark.queries import llm_dedup
+    """Forcing the shared components gate (CC_DRIVER_MAX_PAIRS) to 0
+    sends e2e / softdedup / cluster down the distributed hash-to-min
+    tier — rows must be IDENTICAL to the driver tier (the over-gate
+    regime, unreachable at any shipped SF)."""
+    from local_etl_spark.queries import _util
 
     sf = "/root/testdata/sf0.001"
     for name in ("llm_dedup_cluster", "llm_dedup_e2e", "llm_softdedup"):
         fn = get(name).fn
         base = sorted(map(tuple, fn(spark, sf).collect()))
-        monkeypatch.setattr(llm_dedup, "CC_DRIVER_MAX_PAIRS", 0)
+        monkeypatch.setattr(_util, "CC_DRIVER_MAX_PAIRS", 0)
         got = sorted(map(tuple, fn(spark, sf).collect()))
         monkeypatch.undo()
         assert got == base, name
