@@ -191,6 +191,16 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return table(spark, sf_dir, name)
 
 
+def free_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of ``df``, a frame returned by localCheckpoint().
+    DataFrame.unpersist() only reaches the cache manager, not a local
+    checkpoint's blocks, which otherwise stay until a JVM GC runs
+    Spark's ContextCleaner. A loop that replaces its checkpointed state
+    each round calls this on the replaced frame once the new one is
+    materialized; never on a checkpoint that a live frame still reads."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 # Connected components run on the driver below this many DIRECTED pair
 # rows (twice the undirected pair count): the pair list is a sketch or
 # forest OUTPUT, model-sized at every shipped scale, and one collect
@@ -269,8 +279,8 @@ def _hash_to_min(pairs: DataFrame) -> DataFrame:
     diameter ≤ node-count − 1 rounds, so a loop still moving after
     node-count + 1 rounds raises instead of returning unconverged
     labels. Each round is localCheckpoint()ed (the join plan would
-    otherwise double per round) and the previous one freed; the last
-    round backs the returned frame."""
+    otherwise double per round) and the previous one freed
+    (free_checkpoint); the last round backs the returned frame."""
     edges = pairs.unionAll(pairs.select("dst", "src")).persist()
     try:
         state = (
@@ -294,9 +304,7 @@ def _hash_to_min(pairs: DataFrame) -> DataFrame:
                 )
                 .localCheckpoint()
             )
-            # free the previous round: DataFrame.unpersist() only
-            # reaches the cache manager, not a local checkpoint's blocks
-            state._jdf.queryExecution().logical().rdd().unpersist(False)
+            free_checkpoint(state)
             state = new
             if state.filter("moved").count() == 0:
                 break

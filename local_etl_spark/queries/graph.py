@@ -12,8 +12,9 @@ join + one groupBy on the node key, so the same hash partitioning is
 reused across every round (at cluster scale, pre-`repartition` both
 sides by node id to pin it). ``localCheckpoint`` per round truncates
 lineage — without it round k re-executes rounds 1..k-1 (exponential
-plan growth). The only driver-side values are the per-round
-convergence scalar and the final model-sized result.
+plan growth) — and each loop frees the checkpoint it replaced
+(_util.free_checkpoint). The only driver-side values are the
+per-round convergence scalar and the final model-sized result.
 """
 
 from __future__ import annotations
@@ -25,8 +26,8 @@ from pyspark.sql import functions as F
 
 from local_etl_spark.queries._util import (
     components,
+    free_checkpoint,
     min_labels,
-    ordered_prefix,
     t,
 )
 from local_etl_spark.registry import query
@@ -437,6 +438,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # query). See PR_TOL_L1 for why this is a safety net rather
         # than a local-scale win (damping-bound contraction).
         obs = Observation()
+        done = ranks
         ranks = (
             nodes.join(contrib, "node", "left")
             .join(prev, "node", "left")
@@ -456,6 +458,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             # edge-list shuffle, not the checkpoint job, is the cost
             .localCheckpoint()
         )
+        free_checkpoint(done)
         if obs.get["l1"] < PR_TOL_L1 * PR_SCALE:
             break
     norm.unpersist()
@@ -744,7 +747,8 @@ def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     path-sized (the oracle's UNION-dedup recursion is the same trick:
     per-level dedup keeps the working table ≤ |nodes| instead of
     exploding with path multiplicity). localCheckpoint per round
-    truncates lineage exactly as graph_pagerank does. 4 rounds × one
+    truncates lineage exactly as graph_pagerank does, and each round
+    frees the frontier and visited set it replaced. 4 rounds × one
     join each; every shuffle keys on the node id.
     """
     pair = trade_edges(spark, sf_dir).select("a", "b").distinct().persist()
@@ -761,10 +765,15 @@ def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("node", F.lit(h).alias("hop"))
             .localCheckpoint()
         )
+        if frontier is not visited:
+            free_checkpoint(frontier)
+        frontier = nxt
         if nxt.isEmpty():
             break
+        done = visited
         visited = visited.unionAll(nxt).localCheckpoint()
-        frontier = nxt
+        free_checkpoint(done)
+    free_checkpoint(frontier)
     pair.unpersist()
     return visited
 
@@ -854,19 +863,16 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_graph.py additionally checks exact membership equality
     against a driver-side reference peel.
     """
-    edges = (
-        trade_edges(spark, sf_dir)
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint()
-    )
+    edges = trade_edges(spark, sf_dir).select("a", "b").distinct()
     return kcore_membership(edges, KCORE_K)
 
 
 def kcore_membership(edges: DataFrame, k: int) -> DataFrame:
     """Fixpoint peel over a symmetric (a, b) edge DataFrame — the
     graph_kcore engine, factored out so tests can feed adversarial
-    topologies (the >12-round long-chain cascade from ADVICE r5)."""
+    topologies (the >12-round long-chain cascade from ADVICE r5).
+    Each round frees the edge set and keep set it replaced; the
+    returned frame reads only the last edge set."""
     edges = edges.localCheckpoint()
     while True:
         deg = edges.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
@@ -879,11 +885,14 @@ def kcore_membership(edges: DataFrame, k: int) -> DataFrame:
         if deg.filter(F.col("d") < k).isEmpty():
             break
         keep = deg.filter(F.col("d") >= k).select("a").localCheckpoint()
+        done = edges
         edges = (
             edges.join(keep, "a", "semi")
             .join(keep.select(F.col("a").alias("b")), "b", "semi")
             .localCheckpoint()
         )
+        free_checkpoint(done)
+        free_checkpoint(keep)
     return (
         edges.select(F.col("a").alias("node"))
         .distinct()
@@ -1067,7 +1076,8 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per round, one join of the (side-filtered) edge list with
     the label vector on the neighbor key + one node-keyed aggregate —
-    the graph_pagerank shape; labels localCheckpoint per round.
+    the graph_pagerank shape; labels localCheckpoint per round, and each
+    round frees the labels it replaced.
 
     SQL-ORACLED since round 12 (the 14th rows-only→SQL conversion):
     the schedule is a FIXED LPA_ROUNDS-round unroll (not a fixpoint),
@@ -1252,6 +1262,7 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select(F.col("a").alias("node"), "new_label")
         )
+        done = labels
         labels = (
             labels.join(adopted, "node", "left")
             .select(
@@ -1265,6 +1276,7 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
+        free_checkpoint(done)
     edges.unpersist()
     return labels.select(
         "node",
@@ -1475,24 +1487,19 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BETW_EDGE_BUDGET = 40  # top trade edges kept (complete graph is degenerate)
 BETW_SOURCE_MOD = 3  # sample sources: nationkey % 3 == 0
-# r13 optimization gate: below this many backbone edges the BFS-family
-# loops (betweenness/closeness) run DRIVER-SIDE on the collected edge
-# list — the backbone is budget-bounded by construction, so at every
-# corpus size the loop input is model-sized and distributing it only
-# buys ~20 scheduler round-trips per query. Raising BETW_EDGE_BUDGET
-# past this gate re-enables the original distributed loops.
-GRAPH_DRIVER_MAX_EDGES = 10_000
 
 
-def _betweenness_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sparse weighted backbone of the nation trade graph: the
+def _backbone(spark: SparkSession, sf_dir: str) -> list[tuple[int, int]]:
+    """Sparse backbone of the nation trade graph, collected: the
     assortativity/clustering ops showed the raw nation projection is
     COMPLETE at every shipped SF — and betweenness on a complete graph
-    is identically zero. Keep the BETW_EDGE_BUDGET heaviest edges by
-    lineitem count under the exact total order (cnt DESC, a, b), the
-    standard network-backbone extraction. Rank via ordered_prefix (the
-    edge relation is ≤ |V|² but the discipline is uniform: no
-    unpartitioned window)."""
+    is identically zero. Keep the BETW_EDGE_BUDGET heaviest (a, b)
+    edges by lineitem count under the exact total order (cnt DESC, a,
+    b), the standard network-backbone extraction. (a, b) is the group
+    key, so the order is total and the top-K limit (one
+    TakeOrderedAndProject) selects exactly the oracle's rnk ≤ budget
+    rows. The list is ≤ BETW_EDGE_BUDGET rows at every corpus size, so
+    the three backbone operators run on the driver."""
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -1506,12 +1513,19 @@ def _betweenness_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("c_nationkey", "s_nationkey").alias("a"),
             F.greatest("c_nationkey", "s_nationkey").alias("b"),
         )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    ranked, _n = ordered_prefix(
-        w, [F.desc("cnt"), "a", "b"], rank_col="rnk"
-    )
-    return ranked.filter(F.col("rnk") <= BETW_EDGE_BUDGET).select("a", "b")
+    top = w.orderBy(F.desc("cnt"), "a", "b").limit(BETW_EDGE_BUDGET)
+    return [(r.a, r.b) for r in top.collect()]
+
+
+def _adjacency(pairs: list[tuple[int, int]]) -> dict[int, set[int]]:
+    """Undirected neighbour sets of an (a, b) edge list."""
+    adj: dict[int, set[int]] = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    return adj
 
 
 BETW_ORACLE_DEPTH = 5  # unrolled BFS levels in the SQL witness
@@ -1647,69 +1661,36 @@ def graph_betweenness_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     {{v : v % {BETW_SOURCE_MOD} == 0}}; the estimate is the standard
     sampled-Brandes sum scaled by |V|/|S|, halved for undirectedness.
 
-    Distributed Brandes, level-synchronous (the graph_bfs loop shape,
-    one (src, node)-keyed join per level, localCheckpoint lineage
-    cuts):
+    Brandes (2001), level-synchronous, on the driver: the backbone is
+    at most BETW_EDGE_BUDGET edges at every corpus size (_backbone), so
+    the corpus-sized work — the 4-table edge derivation and its top-K
+    — stays in Spark and the loop runs over the collected list:
       forward — multi-source BFS carrying σ (shortest-path counts):
-        frontier ⋈ edges → candidate (src, child), anti-join visited,
-        σ_child = Σ σ_parent (grouped sum, exact BIGINT);
+        each candidate (src, child) sums its parents' σ before the
+        visited set grows (exact integers);
       backward — dependency accumulation per depth d = maxd..1:
-        δ_v = Σ_{{w : succ on SP}} σ_v/σ_w · (1 + δ_w), computed as
-        level-d deltas joined through edges to level-(d−1) visited
-        rows (the σ ratio keeps only true shortest-path successors
-        because BFS depths differ by exactly 1).
-    Every frontier/visited/delta relation is (src, node)-sized —
-    |S|·|V| rows max, never path-multiplied; σ multiplicities live in
-    one integer column.
+        δ_v = Σ_{w : succ on SP} σ_v/σ_w · (1 + δ_w); the σ ratio
+        keeps only true shortest-path successors because BFS depths
+        differ by exactly 1.
 
     SQL-ORACLED since round 12 (the 15th rows-only→SQL conversion):
-    the two float δ sums are ORDERED folds — the successor ratio sum
-    folds over array_sort(collect_list(struct(w_node, term))) and the
-    per-node betweenness sum folds by source — so every double
-    accumulates in a deterministic sequence that DuckDB's
-    list_sum(list(x ORDER BY k)) replays bit-for-bit
+    the two float δ sums are ORDERED folds — each (src, node)'s
+    successor terms fold in successor order and each node's deltas
+    fold in source order — so every double accumulates in the sequence
+    that DuckDB's list_sum(list(x ORDER BY k)) replays bit-for-bit
     (_betweenness_oracle; BFS-depth margin pytest-pinned like the
-    kcore peel). The folds are per-(src, node) over its SP successors
-    (bounded by degree) and per-node over |S| sources — model-sized
-    lists, never corpus-sized. The pure-Python Brandes replay pytest
-    stays as the independent ground truth.
+    kcore peel). The final round/scale arithmetic stays in Spark
+    expressions on the local relation, so no float op moves engines.
+    The pure-Python Brandes replay pytest stays as the independent
+    ground truth.
 
-    100 TB: the heavy stage is the edge derivation (one fact-fact
-    shuffle, the graph_triangles cost model); the Brandes loop runs on
-    the collapsed graph. For million-node graphs the same plan holds —
-    (src, node) keys hash-partition, the level count is the diameter,
-    and source sampling is exactly the knob that bounds total work
-    (Brandes-exact is |V| BFS passes; ε-approximation needs O(log|V|/ε²)
-    sampled sources regardless of graph size).
-
-    ROUND-13 OPTIMIZATION (guide §1.2 — fix the distributed algorithm
-    first): the backbone is BOUNDED BY CONSTRUCTION (rnk ≤
-    BETW_EDGE_BUDGET edges at EVERY corpus size),
-    so the loop's input is model-sized no matter how big the corpus
-    is. Distributing a ≤40-edge BFS costs ~20 scheduler round-trips
-    (3 jobs/level forward + 1/depth backward, each over a handful of
-    rows) for zero parallelism. The corpus-sized work — the 4-table
-    edge derivation — stays in Spark; below GRAPH_DRIVER_MAX_EDGES the
-    collected backbone runs Brandes driver-side, replaying the
-    oracle's EXACT ordered-fold arithmetic (same level-synchronous σ
-    sums, successor terms folded in w-node order, per-node deltas
-    folded in source order; the final round/scale arithmetic stays in
-    Spark expressions on the local relation so no float op moves
-    engines). Above the gate — only reachable if the budget constant
-    is raised to cluster scale — the original distributed loop runs
-    unchanged (_betweenness_sample_distributed).
+    Scale: the heavy stage is the edge derivation (one fact-fact
+    shuffle, the graph_triangles cost model); source sampling is the
+    knob that bounds the Brandes work (exact is |V| BFS passes; an
+    ε-approximation needs O(log|V|/ε²) sampled sources regardless of
+    graph size).
     """
-    e = _betweenness_graph(spark, sf_dir)
-    pairs = [(r.a, r.b) for r in e.collect()]  # ≤ BETW_EDGE_BUDGET rows
-    if len(pairs) > GRAPH_DRIVER_MAX_EDGES:
-        return _betweenness_sample_distributed(spark, e)
-
-    from collections import defaultdict
-
-    adj: dict[int, set[int]] = defaultdict(set)
-    for a, b in pairs:
-        adj[a].add(b)
-        adj[b].add(a)
+    adj = _adjacency(_backbone(spark, sf_dir))
     nodes = sorted(adj)
     sources = [v for v in nodes if v % BETW_SOURCE_MOD == 0]
     n_nodes, n_sources = len(nodes), len(sources)
@@ -1795,134 +1776,6 @@ def graph_betweenness_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _betweenness_sample_distributed(
-    spark: SparkSession, e: DataFrame
-) -> DataFrame:
-    """The pre-r13 distributed Brandes loop — the shape a
-    million-node backbone would need (only reachable if
-    BETW_EDGE_BUDGET is raised past GRAPH_DRIVER_MAX_EDGES)."""
-    edges = (
-        e.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionAll(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .persist()
-    )
-    nodes = (
-        edges.select(F.col("u").alias("node")).distinct().persist()
-    )
-    n_nodes = nodes.count()
-    sources = nodes.filter(
-        F.col("node") % BETW_SOURCE_MOD == 0
-    ).select(F.col("node").alias("src"))
-    n_sources = sources.count()
-
-    # forward: multi-source BFS with path counts
-    frontier = sources.select(
-        "src",
-        F.col("src").alias("node"),
-        F.lit(0).alias("dist"),
-        F.lit(1).cast("bigint").alias("sigma"),
-    ).localCheckpoint()
-    visited = frontier
-    levels = [frontier]
-    d = 0
-    while True:
-        d += 1
-        nxt = (
-            frontier.join(edges, frontier.node == edges.u)
-            .select("src", F.col("v").alias("node"), "sigma")
-            .join(
-                visited.select("src", "node"), ["src", "node"], "left_anti"
-            )
-            .groupBy("src", "node")
-            .agg(F.sum("sigma").cast("bigint").alias("sigma"))
-            .select("src", "node", F.lit(d).alias("dist"), "sigma")
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionAll(nxt).localCheckpoint()
-        levels.append(nxt)
-        frontier = nxt
-    maxd = len(levels) - 1
-
-    # backward: dependency accumulation, deepest level first
-    acc: list[DataFrame] = []
-    delta = levels[maxd].select(
-        "src", "node", "sigma", F.lit(0.0).alias("delta")
-    )
-    for depth in range(maxd, 0, -1):
-        acc.append(delta.select("src", "node", "delta"))
-        # ordered fold (r12 oracle conversion): each (src, node)'s
-        # ratio sum accumulates successor terms in w-node order —
-        # deterministic doubles the DuckDB witness replays exactly
-        contrib = (
-            delta.join(edges, delta.node == edges.v)
-            .select(
-                "src",
-                F.col("u").alias("node"),
-                delta["node"].alias("w_node"),
-                (
-                    (F.lit(1.0) + F.col("delta"))
-                    / F.col("sigma").cast("double")
-                ).alias("term"),
-            )
-            .groupBy("src", "node")
-            .agg(
-                F.expr(
-                    "aggregate(array_sort(collect_list("
-                    "struct(w_node, term))), CAST(0.0 AS DOUBLE),"
-                    " (acc, x) -> acc + x.term)"
-                ).alias("ratio_sum")
-            )
-        )
-        prev = levels[depth - 1].join(
-            contrib, ["src", "node"], "left"
-        )
-        delta = prev.select(
-            "src",
-            "node",
-            "sigma",
-            (
-                F.coalesce(F.col("ratio_sum"), F.lit(0.0))
-                * F.col("sigma").cast("double")
-            ).alias("delta"),
-        ).localCheckpoint()
-    edges.unpersist()
-    nodes.unpersist()
-
-    if not acc:
-        return nodes.select(
-            "node",
-            F.lit(0.0).alias("betweenness"),
-            F.lit(n_sources).cast("bigint").alias("n_sources"),
-        )
-    all_delta = acc[0]
-    for a in acc[1:]:
-        all_delta = all_delta.unionAll(a)
-    scale = float(n_nodes) / float(n_sources) / 2.0 if n_sources else 0.0
-    # ordered fold by source (each (src, node) appears once across the
-    # per-depth delta relations) — mirrors the oracle's
-    # list_sum(list(delta ORDER BY src))
-    bc = (
-        all_delta.filter(F.col("node") != F.col("src"))
-        .groupBy("node")
-        .agg(
-            F.expr(
-                "aggregate(array_sort(collect_list(struct(src, delta)))"
-                ", CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.delta)"
-            ).alias("raw")
-        )
-    )
-    # complete over the backbone node set: brokers-of-nothing score 0
-    return nodes.join(bc, "node", "left").select(
-        "node",
-        (
-            F.round(F.coalesce(F.col("raw"), F.lit(0.0)) * scale, 6) + 0.0
-        ).alias("betweenness"),
-        F.lit(n_sources).cast("bigint").alias("n_sources"),
-    )
-
-
 @query(
     "graph_closeness_sample",
     family="graph",
@@ -1997,18 +1850,17 @@ def graph_closeness_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     make d(s,v) = d(v,s), so distances FROM the sampled sources
     estimate every node's centrality, scaled by (|V|−1)/|S|.
 
-    Distributed form: the graph_betweenness_sample forward pass minus
-    the σ path counts — level-synchronous multi-source BFS, (src,
-    node)-keyed joins, localCheckpoint lineage cuts; the estimate is
-    one groupBy(node) over the (src, node, dist) visited set.
+    Driver form: the graph_betweenness_sample forward pass minus the
+    σ path counts — a level-synchronous multi-source BFS over the
+    collected backbone (_backbone, ≤ BETW_EDGE_BUDGET edges at every
+    corpus size; the corpus-sized edge derivation stays in Spark).
 
     SQL-ORACLED since round 10 (VERDICT r9 #4 — the 5th rows-only→SQL
     conversion): BFS distances are exact integers, so the only float
     is Σ 1/d — made order-deterministic by folding per-distance terms
-    (count_d/d, at most diameter many) in dist-ASC order via the
-    repo's ordered-fold identity: Spark ``aggregate(array_sort(
-    collect_list(struct(dist, term))), 0.0, +)`` ≡ DuckDB
-    ``list_reduce(list_prepend(0.0, list(term ORDER BY dist)), +)``.
+    (count_d/d, at most diameter many) 0.0-seeded in dist-ASC order,
+    the sequence DuckDB's ``list_reduce(list_prepend(0.0, list(term
+    ORDER BY dist)), +)`` replays.
     The oracle replays the whole pipeline: backbone rank, multi-source
     recursive-CTE BFS (UNION-dedup, dist < 30 — a safe bound, any
     shortest path on a ≤25-node nation graph is < 25), min-dist
@@ -2016,29 +1868,11 @@ def graph_closeness_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     double division. The pure-Python BFS replay pytest stays as the
     independent ground truth.
 
-    100 TB: identical cost model to betweenness — the edge derivation
-    dominates; the BFS runs diameter rounds over node-sized relations,
-    and the source-sample size is the precision/work knob.
-
-    ROUND-13 OPTIMIZATION: same gate as graph_betweenness_sample —
-    the backbone is budget-bounded by construction, so below
-    GRAPH_DRIVER_MAX_EDGES the multi-source BFS runs driver-side on
-    the collected edge list (the corpus-sized edge derivation stays in
-    Spark), replaying the oracle's dist-ASC ordered fold exactly; the
-    final round/scale arithmetic stays in Spark expressions. Above the
-    gate the original distributed loop runs unchanged.
+    Scale: identical cost model to betweenness — the edge derivation
+    dominates, and the source-sample size is the precision/work knob.
+    The final round/scale arithmetic stays in Spark expressions.
     """
-    e = _betweenness_graph(spark, sf_dir)
-    pairs = [(r.a, r.b) for r in e.collect()]  # ≤ BETW_EDGE_BUDGET rows
-    if len(pairs) > GRAPH_DRIVER_MAX_EDGES:
-        return _closeness_sample_distributed(spark, e)
-
-    from collections import defaultdict
-
-    adj: dict[int, set[int]] = defaultdict(set)
-    for a, b in pairs:
-        adj[a].add(b)
-        adj[b].add(a)
+    adj = _adjacency(_backbone(spark, sf_dir))
     nodes = sorted(adj)
     sources = [v for v in nodes if v % BETW_SOURCE_MOD == 0]
     n_nodes, n_sources = len(nodes), len(sources)
@@ -2087,79 +1921,6 @@ def graph_closeness_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 F.coalesce(F.col("h_raw"), F.lit(0.0)) * F.lit(scale), 6
             )
-            + 0.0
-        ).alias("harmonic"),
-        F.lit(n_sources).cast("bigint").alias("n_sources"),
-    )
-
-
-def _closeness_sample_distributed(
-    spark: SparkSession, e: DataFrame
-) -> DataFrame:
-    """The pre-r13 distributed multi-source BFS loop — only reachable
-    if BETW_EDGE_BUDGET is raised past GRAPH_DRIVER_MAX_EDGES."""
-    edges = (
-        e.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionAll(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .persist()
-    )
-    nodes = edges.select(F.col("u").alias("node")).distinct().persist()
-    n_nodes = nodes.count()
-    sources = nodes.filter(
-        F.col("node") % BETW_SOURCE_MOD == 0
-    ).select(F.col("node").alias("src"))
-    n_sources = sources.count()
-
-    frontier = sources.select(
-        "src", F.col("src").alias("node"), F.lit(0).alias("dist")
-    ).localCheckpoint()
-    visited = frontier
-    d = 0
-    while True:
-        d += 1
-        nxt = (
-            frontier.join(edges, frontier.node == edges.u)
-            .select("src", F.col("v").alias("node"))
-            .distinct()
-            .join(
-                visited.select("src", "node"), ["src", "node"], "left_anti"
-            )
-            .select("src", "node", F.lit(d).alias("dist"))
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionAll(nxt).localCheckpoint()
-        frontier = nxt
-    edges.unpersist()
-
-    scale = (
-        float(n_nodes - 1) / float(n_sources) if n_sources else 0.0
-    )
-    # per-distance terms folded in dist-ASC order: bit-identical to the
-    # oracle's list_reduce (a plain sum(1.0/dist) is engine-order-
-    # dependent in the low bits)
-    h = (
-        visited.filter(F.col("dist") > 0)
-        .groupBy("node", "dist")
-        .agg(
-            (
-                F.count(F.lit(1)).cast("double")
-                / F.col("dist").cast("double")
-            ).alias("term")
-        )
-        .groupBy("node")
-        .agg(
-            F.expr(
-                "aggregate(array_sort(collect_list(struct(dist, term))),"
-                " CAST(0 AS DOUBLE), (acc, e) -> acc + e.term)"
-            ).alias("h_raw")
-        )
-    )
-    return nodes.join(h, "node", "left").select(
-        "node",
-        (
-            F.round(F.coalesce(F.col("h_raw"), F.lit(0.0)) * scale, 6)
             + 0.0
         ).alias("harmonic"),
         F.lit(n_sources).cast("bigint").alias("n_sources"),
@@ -2239,63 +2000,28 @@ def graph_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
     peels the current low-degree set or advances k — pure scalar list
     lambdas, which the recursion allows where aggregates are not).
 
-    Engine form: the graph_kcore level-synchronous peel, WITH
-    assignment — each round computes degrees over the surviving edge
-    set (one node-keyed aggregate), drops every node under the current
-    k tagging it core = k−1 (batch removal, so rounds are bounded by
-    peels + degeneracy, not node count), or advances k at a fixpoint.
-    Termination is a theorem: every round removes ≥1 node or
-    increments k ≤ max-degree+1. localCheckpoint truncates per-round
-    lineage (the pagerank/bfs/kcore discipline).
-
-    Scale: identical cost model to graph_kcore — the edge derivation
-    dominates; every shuffle keys on the node id and the edge set only
-    shrinks. The peel-round count is the O(degeneracy) batch-removal
-    bound, the standard distributed-coreness shape.
+    Engine form: the batch peel the oracle's list machine replays, in
+    plain Python over the collected backbone (_backbone, ≤
+    BETW_EDGE_BUDGET edges at every corpus size; the corpus-sized edge
+    derivation stays in Spark). While nodes remain, every node whose
+    degree among the survivors is under the current k gets core k−1
+    and is removed at once; if none is, k advances. Termination: every
+    step removes ≥1 node or increments k ≤ max-degree+1.
     """
-    e = _betweenness_graph(spark, sf_dir)
-    edges = (
-        e.select(
-            F.col("a").cast("bigint").alias("u"),
-            F.col("b").cast("bigint").alias("v"),
-        )
-        .unionAll(
-            e.select(
-                F.col("b").cast("bigint").alias("u"),
-                F.col("a").cast("bigint").alias("v"),
-            )
-        )
-        .localCheckpoint()
-    )
-    remaining = (
-        edges.select(F.col("u").alias("node")).distinct().localCheckpoint()
-    )
-    assigned = spark.createDataFrame([], "node bigint, core int")
+    adj = _adjacency(_backbone(spark, sf_dir))
+    core: dict[int, int] = {}
+    alive = set(adj)
     k = 1
-    while not remaining.isEmpty():
-        deg = (
-            edges.groupBy(F.col("u").alias("node"))
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        low = (
-            remaining.join(deg, "node", "left")
-            .filter(F.coalesce(F.col("deg"), F.lit(0)) < k)
-            .select("node")
-            .localCheckpoint()
-        )
-        if low.isEmpty():
+    while alive:
+        low = {v for v in alive if len(adj[v] & alive) < k}
+        if not low:
             k += 1
             continue
-        assigned = assigned.unionAll(
-            low.select("node", F.lit(k - 1).cast("int").alias("core"))
-        ).localCheckpoint()
-        remaining = remaining.join(low, "node", "left_anti").localCheckpoint()
-        edges = (
-            edges.join(low.withColumnRenamed("node", "u"), "u", "left_anti")
-            .join(low.withColumnRenamed("node", "v"), "v", "left_anti")
-            .localCheckpoint()
-        )
-    return assigned
+        alive -= low
+        core.update(dict.fromkeys(low, k - 1))
+    return spark.createDataFrame(
+        sorted(core.items()), "node bigint, core int"
+    )
 
 
 # --- Borůvka minimum spanning forest (round 13) --------------------------
@@ -2561,15 +2287,17 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     n_nodes = inode_rel.count()
-    edges = ipair.select("u", "v", "w").localCheckpoint()
-    nodes = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select("v"))
+    # before round 1 every node is its own component, so every edge is
+    # a cross edge
+    cross = ipair.select("u", "v", "w").localCheckpoint()
+    ipair.unpersist()
+    comp = (
+        cross.select(F.col("u").alias("node"))
+        .unionAll(cross.select("v"))
         .distinct()
+        .select("node", F.col("node").alias("lab"))
         .localCheckpoint()
     )
-    ipair.unpersist()
-    comp = nodes.select("node", F.col("node").alias("lab")).localCheckpoint()
     bcast = n_nodes <= PR_BROADCAST_MAX_NODES  # node-sized map: the
     # pagerank broadcast gate — below it the edge relation never
     # shuffles for the component join
@@ -2586,13 +2314,18 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
         # non-cross edges can NEVER become cross again (components only
         # merge) — keep only cross edges for the next round, so the
         # per-round join shrinks monotonically
+        done = cross
         cross = (
-            edges.join(cu, "u")
+            done.select("u", "v", "w")
+            .join(cu, "u")
             .join(cv, "v")
             .filter(F.col("cu") != F.col("cv"))
             .localCheckpoint()
         )
-        edges = cross.select("u", "v", "w")
+        free_checkpoint(done)
+        if sel is None:
+            # round 1: the initial map; later maps are components() output
+            free_checkpoint(comp)
         # both component sides in ONE pass (a unionAll of two selects
         # re-executes the join per branch); min(struct(w,u,v)) IS the
         # argmin — the key carries the whole edge
@@ -2607,10 +2340,15 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         mins = mins.localCheckpoint()
         if mins.isEmpty():
+            free_checkpoint(mins)
             break
-        sel = (
-            mins if sel is None else sel.unionAll(mins).distinct()
-        ).localCheckpoint()
+        if sel is None:
+            sel = mins
+        else:
+            done = sel
+            sel = sel.unionAll(mins).distinct().localCheckpoint()
+            free_checkpoint(done)
+            free_checkpoint(mins)
         # every node is in the forest from round 1 on (each singleton
         # picks an edge), so the forest's labels cover the whole map
         comp = components(sel.select("u", "v")).select(
@@ -2618,6 +2356,7 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     else:
         raise RuntimeError(_BORUVKA_CAP_MSG)
+    free_checkpoint(cross)
     return sel.join(
         comp.withColumnRenamed("node", "u").withColumnRenamed(
             "lab", "component"

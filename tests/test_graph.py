@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from local_etl_spark.queries.graph import DAMPING, N_ITER, graph_pagerank, trade_edges
 
@@ -124,8 +125,14 @@ def test_kcore_long_chain_peels_to_fixpoint(spark):
         (b, a) for a, b in path + clique
     ]
     edges = spark.createDataFrame(sym, "a string, b string")
-    got = {r["node"] for r in kcore_membership(edges, 2).collect()}
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    core = kcore_membership(edges, 2)
+    got = {r["node"] for r in core.collect()}
     assert got == set(clique_nodes), got
+    # each of the ~19 rounds frees the edge and keep sets it replaced;
+    # only the last edge set, which the result reads, stays persisted
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 1
     # every survivor keeps degree >= k within the survivors — the
     # contract the old cap could violate
     import collections
@@ -399,7 +406,7 @@ def test_coreness_python_replay(spark):
     """Third implementation for graph_coreness: the textbook peeling
     algorithm (Batagelj–Zaversnik bucket variant) over the SAME
     backbone edges, in pure Python — independent of both the engine's
-    relational peel and the oracle's list-machine recursion."""
+    batch peel and the oracle's list-machine recursion."""
     import duckdb
 
     from local_etl_spark.queries.graph import BETW_EDGE_BUDGET, graph_coreness
@@ -708,10 +715,59 @@ def test_graph_empty_corpus_guard(spark, tmp_path):
         ("graph_pagerank", ["node", "rank", "kind"]),
         ("graph_label_prop", ["node", "community", "kind"]),
         ("graph_mst", ["u", "v", "w", "component"]),
+        ("graph_betweenness_sample", ["node", "betweenness", "n_sources"]),
+        ("graph_closeness_sample", ["node", "harmonic", "n_sources"]),
+        ("graph_coreness", ["node", "core"]),
     ):
         df = get(name).fn(spark, dst)
         assert df.columns == cols
         assert df.count() == 0
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["graph_bfs", "graph_kcore", "graph_pagerank", "graph_label_prop", "graph_mst"],
+)
+def test_loops_free_replaced_checkpoints(spark, monkeypatch, name):
+    """Every per-round loop frees the local checkpoint it replaces: one
+    call leaves exactly one new persisted RDD, the last round's state
+    that the returned frame reads (graph_mst: its forest; the forest
+    labels are a driver-built frame). pagerank, label_prop and mst run
+    their distributed loops. Counted as in test_components._run:
+    getPersistentRDDs() key sets before and after the call."""
+    import local_etl_spark.queries.graph as G
+    from local_etl_spark.registry import get
+
+    monkeypatch.setattr(G, "PR_LOCAL_MAX_EDGES", 0)
+    monkeypatch.setattr(G, "MST_LOCAL_MAX_EDGES", 0)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    df = get(name).fn(spark, "/root/testdata/sf0.001")
+    assert df.count() > 0
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 1
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["graph_betweenness_sample", "graph_closeness_sample", "graph_coreness"],
+)
+def test_backbone_build_job_count(spark, name):
+    """The three backbone operators collect the ≤ BETW_EDGE_BUDGET-edge
+    backbone with one top-K and run on the driver, so building one at
+    sf0.01 launches at most 10 Spark jobs (the edge derivation's scan,
+    shuffle and broadcast stages); a per-round Spark loop costs tens."""
+    from local_etl_spark.registry import get
+
+    sc = spark.sparkContext
+    group = f"build-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        get(name).fn(spark, "/root/testdata/sf0.01")
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 10, n_jobs
 
 
 def test_mst_oracle_margins(spark):
