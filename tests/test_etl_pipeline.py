@@ -19,6 +19,8 @@ import pytest
 from local_etl_spark.etl.config import load_config, reference_config
 from local_etl_spark.etl.pipeline import materialize_quarantine, run_pipeline
 
+from tests.reference import SCHEMA_DIR, USERS_SCHEMA
+
 USERS = {
     # file_name -> (doc-or-raw, expectation)
     "valid_2tok.json": {
@@ -112,7 +114,7 @@ def etl_run(spark, tmp_path_factory):
             with open(os.path.join(base, d, fn), "w", encoding="utf-8") as fh:
                 fh.write(doc if isinstance(doc, str) else json.dumps(doc, indent=2))
     for s in ("user-events-schema.json", "card-events-schema.json"):
-        shutil.copy(f"/root/reference/{s}", os.path.join(base, s))
+        shutil.copy(os.path.join(SCHEMA_DIR, s), os.path.join(base, s))
     cfg = reference_config(base)
     v2_metrics = run_pipeline(spark, cfg, version=2)
     v1_metrics = run_pipeline(spark, cfg, version=1)
@@ -485,7 +487,7 @@ def test_undecodable_bytes_classify_corrupt(spark, tmp_path):
         with open(d / "latin1.json", encoding="utf-8") as fh:
             json.load(fh)
 
-    schema = load_schema("/root/reference/user-events-schema.json")
+    schema = load_schema(USERS_SCHEMA)
     rows = {
         os.path.basename(r["file_path"]): r
         for r in classify(read_event_docs(spark, str(d)), schema)
@@ -573,7 +575,7 @@ def test_deep_nesting_crash_class(spark, tmp_path):
     d = tmp_path / "users"
     d.mkdir()
     (d / "deep.json").write_text(doc, encoding="utf-8")
-    schema = load_schema("/root/reference/user-events-schema.json")
+    schema = load_schema(USERS_SCHEMA)
     row = (
         classify(read_event_docs(spark, str(d)), schema)
         .select("error_class", "is_valid", "raw")

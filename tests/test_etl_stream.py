@@ -16,6 +16,7 @@ from local_etl_spark.etl.config import reference_config
 from local_etl_spark.etl.pipeline import run_pipeline
 from local_etl_spark.streaming.etl_stream import run_table_stream
 
+from tests.reference import SCHEMA_DIR
 from tests.test_etl_pipeline import USERS, read_csv_rows
 
 
@@ -32,7 +33,7 @@ def test_stream_matches_batch(spark, tmp_path):
         os.makedirs(os.path.join(base, "users"))
         os.makedirs(os.path.join(base, "cards"))  # reference_config needs it
         for s in ("user-events-schema.json", "card-events-schema.json"):
-            shutil.copy(f"/root/reference/{s}", os.path.join(base, s))
+            shutil.copy(os.path.join(SCHEMA_DIR, s), os.path.join(base, s))
 
     items = sorted(USERS.items())
     half = len(items) // 2

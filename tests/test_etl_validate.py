@@ -24,8 +24,7 @@ from pyspark.sql import functions as F
 from local_etl_spark.etl.schema_translate import load_schema
 from local_etl_spark.etl.pipeline import classify
 
-USERS_SCHEMA = "/root/reference/user-events-schema.json"
-CARDS_SCHEMA = "/root/reference/card-events-schema.json"
+from tests.reference import CARDS_SCHEMA, USERS_SCHEMA
 
 UMD = {"type": "user", "event_at": "2023-10-23 22:55:01", "event_id": "0a1b"}
 UPL = {"id": 945, "name": "Lawrence Welch", "address": "a\nb", "job": "x, y", "score": 0.86}

@@ -35,6 +35,8 @@ import tools_fs_fuzz as ff
 import tools_schema_fuzz as sfz
 import tools_table_fuzz as tf
 
+from tests.reference import needs_reference
+
 SCEN = ["symlink_cycle", "symlink_dangling"]
 
 
@@ -50,6 +52,7 @@ def fs_fuzz(spark, tmp_path_factory):
     return results
 
 
+@needs_reference
 @pytest.mark.parametrize("name", SCEN)
 def test_fs_layer_live_diff_clean(fs_fuzz, name):
     assert fs_fuzz[name] == [], fs_fuzz[name]

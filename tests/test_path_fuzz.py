@@ -43,6 +43,8 @@ import tools_path_fuzz as pf
 import tools_schema_fuzz as sfz
 import tools_table_fuzz as tf
 
+from tests.reference import needs_reference
+
 SCEN = ["colon_name", "glob_meta", "uri_hazard", "dir_named_json",
         "colon_dir"]
 
@@ -59,6 +61,7 @@ def path_fuzz(spark, tmp_path_factory):
     return results
 
 
+@needs_reference
 @pytest.mark.parametrize("name", SCEN)
 def test_path_layer_live_diff_clean(path_fuzz, name):
     assert path_fuzz[name] == [], path_fuzz[name]

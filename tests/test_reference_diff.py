@@ -23,6 +23,8 @@ import sys
 
 import pytest
 
+from tests.reference import REFERENCE_DIR, SCHEMA_DIR, SCHEMA_FILES, needs_reference
+
 N_USERS = 200
 N_CARDS = 120
 
@@ -150,6 +152,7 @@ def _diff(ref: list[dict], eng: list[dict], key: str):
     assert not mismatches, mismatches[:3]
 
 
+@needs_reference
 def test_v2_users_payload_identical(diff_run):
     _, ref2, out = diff_run
     ref = _ref_rows(str(ref2 / "users.csv"))
@@ -157,6 +160,7 @@ def test_v2_users_payload_identical(diff_run):
     _diff(ref, _engine_rows(str(out / "users.csv")), "event_id")
 
 
+@needs_reference
 def test_v2_cards_payload_identical(diff_run):
     _, ref2, out = diff_run
     ref = _ref_rows(str(ref2 / "cards.csv"))
@@ -164,6 +168,7 @@ def test_v2_cards_payload_identical(diff_run):
     _diff(ref, _engine_rows(str(out / "cards.csv")), "event_id")
 
 
+@needs_reference
 def test_v2_metadata_identical(diff_run):
     # ONE shared metadata.csv for both tables (reference main2.py:20,28)
     _, ref2, out = diff_run
@@ -172,6 +177,7 @@ def test_v2_metadata_identical(diff_run):
     _diff(ref, _engine_rows(str(out / "metadata.csv")), "event_id")
 
 
+@needs_reference
 def test_v1_users_flat_identical(diff_run):
     ref1, _, out = diff_run
     ref = _ref_rows(str(ref1 / "users.csv"))
@@ -179,6 +185,7 @@ def test_v1_users_flat_identical(diff_run):
     _diff(ref, _engine_rows(str(out / "users_flat.csv")), "event_id")
 
 
+@needs_reference
 def test_v1_cards_flat_identical(diff_run):
     ref1, _, out = diff_run
     ref = _ref_rows(str(ref1 / "cards.csv"))
@@ -186,6 +193,7 @@ def test_v1_cards_flat_identical(diff_run):
     _diff(ref, _engine_rows(str(out / "cards_flat.csv")), "event_id")
 
 
+@needs_reference
 def test_no_quarantine_on_survivable_corpus(diff_run):
     ref1, ref2, _ = diff_run
     for base in (ref1, ref2):
@@ -193,3 +201,15 @@ def test_no_quarantine_on_survivable_corpus(diff_run):
             p = base / d
             if p.exists():
                 assert not list(p.glob("*"))
+
+
+@needs_reference
+def test_committed_schemas_match_reference():
+    """The engine-only ETL tests read tests/schemas/ in place of the
+    checkout's two schema files; they must load equal to the checkout's,
+    every ``required`` list in the same order (list equality is ordered)."""
+    for name in SCHEMA_FILES:
+        with open(os.path.join(SCHEMA_DIR, name), "rb") as fh:
+            committed = json.load(fh)
+        with open(os.path.join(REFERENCE_DIR, name), "rb") as fh:
+            assert committed == json.load(fh), name

@@ -41,6 +41,8 @@ import sys
 
 import pytest
 
+from tests.reference import needs_reference
+
 N_VALID = 100
 
 # Every invalid doc is parseable JSON whose best_match message does NOT
@@ -735,6 +737,7 @@ def _engine_error_entries(errors_dir) -> set[tuple[str, str]]:
     return out
 
 
+@needs_reference
 def test_valid_rows_survive_v1_and_v2(fuzz_run):
     ref1, ref2, out, *_ = fuzz_run
     n_valid = N_VALID + len(_edge_valid_user_docs()) + len(_raw_valid_user_docs())
@@ -749,6 +752,7 @@ def test_valid_rows_survive_v1_and_v2(fuzz_run):
     _diff(ref_cards, _engine_rows(str(out / "cards.csv")), "event_id")
 
 
+@needs_reference
 def test_error_log_messages_match_best_match(fuzz_run):
     """The engine's compiled when-chain must reproduce jsonschema
     best_match()'s choice for every seeded shape — including the
@@ -772,6 +776,7 @@ def test_error_log_messages_match_best_match(fuzz_run):
     assert _ref_error_entries(str(ref2 / "errors.log")) == ref_entries
 
 
+@needs_reference
 def test_quarantine_files_byte_identical(fuzz_run):
     ref1, _, out, *_ = fuzz_run
     from local_etl_spark.session import get_spark
@@ -792,6 +797,7 @@ def test_quarantine_files_byte_identical(fuzz_run):
         assert not diff, (table, diff[:3])
 
 
+@needs_reference
 def test_counters_match_reference_stdout(fuzz_run):
     *_, stdout1, stdout2, metrics, metrics_v1 = fuzz_run
 
@@ -989,6 +995,7 @@ def _card_mutation_corpus(n: int, seed: int) -> dict[str, dict]:
     return out
 
 
+@needs_reference
 def test_randomized_mutations_match_reference(spark, tmp_path):
     """40 seeded random type mutations: the engine's validation
     when-chain must reproduce jsonschema best_match()'s message for

@@ -32,6 +32,8 @@ import pytest
 
 import tools_rerun_fuzz as rf
 
+from tests.reference import needs_reference
+
 SCEN = [
     "rerun_accumulation",
     "rerun_growth",
@@ -50,6 +52,7 @@ def rerun_fuzz(spark, tmp_path_factory):
     return results
 
 
+@needs_reference
 @pytest.mark.parametrize("name", SCEN)
 def test_rerun_live_diff_clean(rerun_fuzz, name):
     assert rerun_fuzz[name] == [], rerun_fuzz[name]

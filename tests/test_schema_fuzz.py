@@ -36,6 +36,8 @@ import pytest
 
 import tools_schema_fuzz as sf
 
+from tests.reference import needs_reference
+
 SCEN = [
     "dup_across_lists",
     "ghost_required",
@@ -67,12 +69,14 @@ def schema_fuzz(spark, tmp_path_factory):
     return results, root
 
 
+@needs_reference
 @pytest.mark.parametrize("name", SCEN)
 def test_schema_mutation_live_diff_clean(schema_fuzz, name):
     results, _ = schema_fuzz
     assert results[name] == [], results[name]
 
 
+@needs_reference
 def test_dup_required_reference_schemaerror_divergence(spark, tmp_path):
     """Duplicate entries in a ``required`` list: jsonschema validates
     the SCHEMA against the draft-07 metaschema (uniqueItems) and both

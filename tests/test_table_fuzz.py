@@ -32,6 +32,8 @@ import pytest
 
 import tools_table_fuzz as tf
 
+from tests.reference import needs_reference
+
 SCEN = [
     "json_case_files",
     "cross_schema_docs",
@@ -52,6 +54,7 @@ def table_fuzz(spark, tmp_path_factory):
     return results
 
 
+@needs_reference
 @pytest.mark.parametrize("name", SCEN)
 def test_table_loop_live_diff_clean(table_fuzz, name):
     assert table_fuzz[name] == [], table_fuzz[name]
