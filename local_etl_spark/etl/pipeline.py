@@ -81,18 +81,6 @@ class TableMetrics:
     invalid_count: int = 0
 
 
-def _scan_partitions(spark: SparkSession, data_dir: str) -> int:
-    """Partition target for a one-doc-per-file corpus: >=250 events per
-    task, capped at session parallelism (local dirs only; anything we
-    can't stat cheaply gets the cap)."""
-    cap = spark.sparkContext.defaultParallelism
-    try:
-        n_files = sum(1 for f in os.listdir(data_dir) if f.endswith(".json"))
-    except OSError:
-        return cap
-    return max(1, min(cap, n_files // 250))
-
-
 def _parse_event(raw: Column) -> Column:
     """Document text → variant, matching Python json.load's accepted
     grammar. The variant parser rejects the bare non-standard number
@@ -131,6 +119,11 @@ def _parse_event(raw: Column) -> Column:
     return F.coalesce(F.try_parse_json(raw), F.try_parse_json(rewritten))
 
 
+BINARY_FILE_SCHEMA = (
+    "path string, modificationTime timestamp, length long, content binary"
+)
+
+
 def read_event_docs(spark: SparkSession, data_dir: str) -> DataFrame:
     """Scan a directory of one-JSON-document-per-file events (R1/R2).
 
@@ -138,9 +131,101 @@ def read_event_docs(spark: SparkSession, data_dir: str) -> DataFrame:
     ``wholetext`` mode pays a per-file reader setup that is ~10×
     slower on many-tiny-file corpora (measured 5.8 s vs 0.6 s for a
     20k-file scan) — binaryFile is the fast whole-file path, and the
-    UTF-8 decode is a plain column expression. pathGlobFilter skips
-    non-.json files exactly like the reference's extension check
-    (main.py:163-167); non-recursive like ``next(os.walk(...))``.
+    UTF-8 decode is a plain column expression (event_docs).
+    pathGlobFilter skips non-.json files exactly like the reference's
+    extension check (main.py:163-167); non-recursive like
+    ``next(os.walk(...))``.
+
+    The data dir is listed once, driver-side (_json_files): that one
+    listing decides the sidechannel files and the partition target.
+    The docs come back coalesced to >=250 events per task, so the fixed
+    per-task cost of the downstream sink jobs amortizes; the cap is the
+    session's parallelism, which dominates at cluster scale (millions
+    of files -> full parallelism) and is the target for any dir that
+    cannot be listed locally.
+    """
+    files = _json_files(data_dir)
+    sidechannel, visible = [], []
+    for p in files or ():
+        name = os.path.basename(p)
+        # names a Hadoop listing hides or cannot read: see below
+        if name.startswith((".", "_")) or ":" in name:
+            sidechannel.append(p)
+        else:
+            visible.append(p)
+    reader = spark.read.format("binaryFile").option(
+        "pathGlobFilter", "*.json"
+    )
+    colon = any(":" in os.path.basename(p) for p in sidechannel)
+    if colon or _symlinked_dirs(data_dir):
+        # COLON-NAME repair (path fuzz, round 12): one ':'-named file
+        # poisons the ENTIRE dir scan — the task-side checksum path
+        # Path('.<name>.crc') parses the text before the colon as a URI
+        # scheme and throws URISyntaxException, so the whole job dies,
+        # not just that file (os.walk, and so the reference, reads it
+        # like any file). Swap the main scan to an explicit
+        # glob-escaped path list WITHOUT the colon names (they join
+        # the driver-listed sidechannel below, like hidden files);
+        # every other dir keeps the plain single-path load.
+        # SYMLINK-CYCLE repair (fs fuzz, round 13): a symlinked dir
+        # anywhere under the data dir can cycle and the Hadoop leaf
+        # listing follows it FOREVER (measured hang; the reference's
+        # non-recursive os.walk is unaffected). The same explicit
+        # top-level path list never descends into any directory, so
+        # any symlinked-dir layout routes through it too — contents
+        # of subdirectories are excluded either way (the dir_named_
+        # json/colon_dir pinned semantics).
+        if visible:
+            base = reader.load([_glob_escape(p) for p in visible])
+        else:
+            base = spark.createDataFrame([], BINARY_FILE_SCHEMA)
+    else:
+        base = reader.load(data_dir)
+    scan = base.select("path", "content")
+    # HIDDEN-FILE repair (table fuzz, round 10): every Spark file
+    # source — dir listing, explicit paths, even sc.binaryFiles —
+    # silently drops names starting with '.' or '_' (the Hadoop
+    # metadata convention: _SUCCESS, ._copying). The reference's
+    # endswith('.json') check has no such notion: '.json' and
+    # '_backup.json' are data to it. The driver-side listing names the
+    # stragglers (non-local dirs where the listing fails keep the
+    # Hadoop convention, which is also the right call on object
+    # stores); read them executor-side via mapInPandas, then union
+    # into the same scan schema. Hidden files are by construction rare
+    # — one tiny extra partition, no effect on the main scan's plan.
+    if sidechannel:
+        hdf = spark.createDataFrame([(p,) for p in sidechannel], "path string")
+
+        def read_files(batches):
+            import pandas as pd
+
+            for pdf in batches:
+                paths, contents = [], []
+                for p in pdf["path"]:
+                    # a dot/underscore file seen at driver listing time
+                    # can vanish before the task runs (an in-flight
+                    # '._copying' temp is the exact convention being
+                    # bypassed) — skip it, matching the tolerance of
+                    # Spark's own listing-to-read window
+                    try:
+                        with open(p, "rb") as fh:
+                            contents.append(fh.read())
+                    except OSError:
+                        continue
+                    paths.append(p)
+                yield pd.DataFrame({"path": paths, "content": contents})
+
+        scan = scan.unionByName(
+            hdf.mapInPandas(read_files, schema="path string, content binary")
+        )
+    cap = spark.sparkContext.defaultParallelism
+    n = cap if files is None else max(1, min(cap, len(files) // 250))
+    return event_docs(scan).coalesce(n)
+
+
+def event_docs(scan: DataFrame) -> DataFrame:
+    """binaryFile rows ``(path, content)`` → ``(file_path, raw, v)``:
+    the one document decode of the batch scan and the streaming ingest.
     Corrupt documents become SQL-null variants via try_parse_json
     instead of crashing.
 
@@ -155,136 +240,22 @@ def read_event_docs(spark: SparkSession, data_dir: str) -> DataFrame:
     replacement-decoded text (a byte-verbatim quarantine copy is
     impossible for undecodable input in a string-typed pipeline).
     """
-    content = F.col("content")
-    raw = content.cast("string")  # UTF-8 with U+FFFD replacement, never throws
-    reader = spark.read.format("binaryFile").option(
-        "pathGlobFilter", "*.json"
-    )
-    colon = _colon_json_files(data_dir)
-    if colon or _symlinked_dirs(data_dir):
-        # COLON-NAME repair (path fuzz, round 12): one ':'-named file
-        # poisons the ENTIRE dir scan — the task-side checksum path
-        # construction throws URISyntaxException, so the whole job
-        # dies, not just that file. Swap the main scan to an explicit
-        # glob-escaped path list WITHOUT the colon names (they join
-        # the driver-listed sidechannel below, like hidden files);
-        # every other dir keeps the plain single-path load.
-        # SYMLINK-CYCLE repair (fs fuzz, round 13): a symlinked dir
-        # anywhere under the data dir can cycle and the Hadoop leaf
-        # listing follows it FOREVER (measured hang; the reference's
-        # non-recursive os.walk is unaffected). The same explicit
-        # top-level path list never descends into any directory, so
-        # any symlinked-dir layout routes through it too — contents
-        # of subdirectories are excluded either way (the dir_named_
-        # json/colon_dir pinned semantics).
-        visible = sorted(
-            os.path.join(data_dir, n)
-            for n in os.listdir(data_dir)
-            if n.endswith(".json")
-            and ":" not in n
-            and not (n.startswith(".") or n.startswith("_"))
-            and os.path.isfile(os.path.join(data_dir, n))
-        )
-        if visible:
-            base = reader.load([_glob_escape(p) for p in visible])
-        else:
-            base = spark.createDataFrame(
-                [],
-                "path string, modificationTime timestamp,"
-                " length long, content binary",
-            )
-    else:
-        base = reader.load(data_dir)
-    scan = base.select(
-        F.regexp_replace(F.col("path"), "^file:", "").alias("file_path"),
-        content.alias("content"),
-    )
-    # HIDDEN-FILE repair (table fuzz, round 10): every Spark file
-    # source — dir listing, explicit paths, even sc.binaryFiles —
-    # silently drops names starting with '.' or '_' (the Hadoop
-    # metadata convention: _SUCCESS, ._copying). The reference's
-    # endswith('.json') check has no such notion: '.json' and
-    # '_backup.json' are data to it. List the stragglers driver-side
-    # (the _scan_partitions local-listing pattern; non-local dirs
-    # where the listing fails keep the Hadoop convention, which is
-    # also the right call on object stores) and read them
-    # executor-side via mapInPandas, then union into the same scan
-    # schema. Hidden files are by construction rare — one tiny extra
-    # partition, no effect on the main scan's plan.
-    hidden = _hidden_json_files(data_dir) + colon
-    if hidden:
-        hdf = spark.createDataFrame(
-            [(p,) for p in hidden], "file_path string"
-        )
-
-        def read_files(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                paths, contents = [], []
-                for p in pdf["file_path"]:
-                    # a dot/underscore file seen at driver listing time
-                    # can vanish before the task runs (an in-flight
-                    # '._copying' temp is the exact convention being
-                    # bypassed) — skip it, matching the tolerance of
-                    # Spark's own listing-to-read window
-                    try:
-                        with open(p, "rb") as fh:
-                            contents.append(fh.read())
-                    except OSError:
-                        continue
-                    paths.append(p)
-                yield pd.DataFrame({"file_path": paths, "content": contents})
-
-        scan = scan.unionByName(
-            hdf.mapInPandas(
-                read_files, schema="file_path string, content binary"
-            )
-        )
+    raw = F.col("content").cast("string")  # U+FFFD replacement, never throws
     return scan.select(
-        "file_path",
+        F.regexp_replace(F.col("path"), "^file:", "").alias("file_path"),
         raw.alias("raw"),
         F.when(F.expr("is_valid_utf8(content)"), _parse_event(raw)).alias("v"),
     )
 
 
-def _hidden_json_files(data_dir: str) -> list[str]:
-    """Top-level *.json files a Hadoop listing would hide (dot/
-    underscore-prefixed) — [] when the dir can't be listed locally."""
+def _json_files(data_dir: str) -> list[str] | None:
     try:
-        names = os.listdir(data_dir)
+        with os.scandir(data_dir) as it:
+            return sorted(
+                e.path for e in it if e.name.endswith(".json") and e.is_file()
+            )
     except OSError:
-        return []
-    return sorted(
-        os.path.join(data_dir, f)
-        for f in names
-        if f.endswith(".json")
-        and (f.startswith(".") or f.startswith("_"))
-        and os.path.isfile(os.path.join(data_dir, f))
-    )
-
-
-def _colon_json_files(data_dir: str) -> list[str]:
-    """Top-level non-hidden *.json files whose NAME contains ':' —
-    Hadoop cannot read these (path fuzz, round 12): the local
-    checksum layer constructs Path('.<name>.crc') and
-    java.net.URI parses the text before the colon as a scheme →
-    URISyntaxException mid-task, killing the whole scan. os.walk has
-    no such notion, so the reference processes them like any file.
-    [] when the dir can't be listed locally (object stores forbid ':'
-    in keys anyway)."""
-    try:
-        names = os.listdir(data_dir)
-    except OSError:
-        return []
-    return sorted(
-        os.path.join(data_dir, f)
-        for f in names
-        if f.endswith(".json")
-        and ":" in f
-        and not (f.startswith(".") or f.startswith("_"))
-        and os.path.isfile(os.path.join(data_dir, f))
-    )
+        return None
 
 
 def _symlinked_dirs(data_dir: str) -> list[str]:
@@ -685,43 +656,10 @@ def run_table(
     the file and logs BEFORE deciding repairability, main.py:179-187).
     """
     schema = load_schema(cfg.path(table.schema_file))
-    data_dir = cfg.path(table.data_dir)
-    docs = read_event_docs(spark, data_dir)
-    # one-doc-per-file corpora: target >=250 events per task so the fixed
-    # per-task cost of the 4 downstream sink jobs amortizes; cap at the
-    # session's parallelism. At cluster scale the cap dominates (millions
-    # of files -> full parallelism); the listing is a cheap local stat.
-    docs = docs.coalesce(_scan_partitions(spark, data_dir))
-    # counters ride on the first sink write via observe() instead of a
-    # dedicated count job (R15 semantics, one fewer pass)
-    obs = Observation(f"etl_metrics_{table.name}")
-    classified = (
-        classify(docs, schema)
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.col("is_valid").cast("long")).alias("valid"),
-        )
-        .persist()
-    )
+    docs = read_event_docs(spark, cfg.path(table.data_dir))
+    classified = classify(docs, schema).persist()
     try:
-        # The first sink write materializes the cache AND fires the
-        # observe() counters (its filter sits above the cache node, so the
-        # job computes every partition); the remaining sinks then only pay
-        # render+commit over the warm cache. Folding materialization into
-        # the first sink instead of a dedicated count() action saves one
-        # full scan+classify pass (measured 1.9s -> 1.5s on the 2000-file
-        # corpus).
-        write_sinks(cfg, table, schema, classified, version)
-        got = obs.get
-        total = got["total"] or 0
-        valid = got["valid"] or 0
-        return TableMetrics(
-            table=table.name,
-            file_count=total,
-            valid_count=valid,
-            invalid_count=total - valid,
-        )
+        return write_sinks(cfg, table, schema, classified, version)
     finally:
         classified.unpersist()
 
@@ -732,20 +670,21 @@ def write_sinks(
     schema: EnvelopeSchema,
     classified: DataFrame,
     version: int = 2,
-) -> None:
-    """Route one classified batch to the three sinks (R5/R6/R14).
+) -> TableMetrics:
+    """Route one classified batch to the three sinks (R5/R6/R14) and
+    return its counter triple (R15).
 
-    Shared by the batch pipeline (run_table) and the streaming ingest
-    (streaming/etl_stream.py foreachBatch) — identical routing semantics
-    in both execution modes.
+    Shared by the batch pipeline (run_table, run_table_incremental) and
+    the streaming ingest (streaming/etl_stream.py foreachBatch) —
+    identical routing semantics in both execution modes.
     """
-    # ride the materializing first-sink job with an invalid-row counter
-    # (round 10): a CLEAN batch — the steady state of any production
-    # feed — then SKIPS the quarantine and error-log jobs entirely,
-    # which also matches the reference exactly (it creates errors.log /
-    # the mismatch dir lazily, only when an error occurs). The counter
-    # costs nothing: observe() folds into the job that computes the
-    # cache anyway.
+    # the counters ride the materializing first-sink job via observe()
+    # instead of a dedicated count job (R15 semantics, one fewer pass).
+    # They also gate the error path (round 10): a CLEAN batch — the
+    # steady state of any production feed — SKIPS the quarantine and
+    # error-log jobs entirely, which also matches the reference exactly
+    # (it creates errors.log / the mismatch dir lazily, only when an
+    # error occurs).
     sink_obs = Observation(f"etl_sink_{table.name}")
     keep = F.col("is_valid") | (
         F.lit(cfg.replace_missing_data)
@@ -757,7 +696,8 @@ def write_sinks(
     # full batch
     kept_first = classified.observe(
         sink_obs,
-        F.sum((~F.col("is_valid")).cast("long")).alias("n_invalid"),
+        F.count(F.lit(1)).alias("total"),
+        F.sum(F.col("is_valid").cast("long")).alias("valid"),
     ).where(keep)
     kept = classified.where(keep)
     invalid = classified.where(~F.col("is_valid"))
@@ -879,8 +819,8 @@ def write_sinks(
     ws_key = "spark.sql.codegen.wholeStage"
     spark = classified.sparkSession
     # The FIRST sink write also materializes the classification cache
-    # (and fires run_table's observe() counters — its filter sits
-    # above the cache node, so the job computes every partition). A
+    # (and fires the observe() counters — its filter sits above the
+    # cache node, so the job computes every partition). A
     # separate count() job was tried in round 9 to stage the cache
     # under fused conf; measured round 10: non-fused classify
     # materialization is within noise of fused (the ~40-branch CASE
@@ -893,14 +833,22 @@ def write_sinks(
         writes[0]()
     finally:
         spark.conf.set(ws_key, ws_old)
-    # the materializing job has completed, so the batch's invalid
-    # count is known: a clean batch skips the two error-path jobs
-    if (sink_obs.get["n_invalid"] or 0) > 0:
+    # the materializing job has completed, so the batch's counters are
+    # known: a clean batch skips the two error-path jobs
+    got = sink_obs.get
+    total, valid = got["total"] or 0, got["valid"] or 0
+    if total > valid:
         writes += error_writes
     if len(writes) > 1:
         with ThreadPoolExecutor(max_workers=len(writes) - 1) as pool:
             for fut in [pool.submit(w) for w in writes[1:]]:
                 fut.result()
+    return TableMetrics(
+        table=table.name,
+        file_count=total,
+        valid_count=valid,
+        invalid_count=total - valid,
+    )
 
 
 def run_pipeline(
@@ -932,25 +880,14 @@ def run_table_incremental(
     the state table stays broadcast-sized up to millions of files.
     """
     schema = load_schema(cfg.path(table.schema_file))
-    data_dir = cfg.path(table.data_dir)
     state_path = os.path.join(state_dir, f"{table.name}_seen_files")
-    docs = read_event_docs(spark, data_dir)
+    docs = read_event_docs(spark, cfg.path(table.data_dir))
     if os.path.exists(state_path):
         seen = spark.read.parquet(state_path)
         docs = docs.join(F.broadcast(seen), "file_path", "left_anti")
-    docs = docs.coalesce(_scan_partitions(spark, data_dir))
-    obs = Observation(f"etl_incr_metrics_{table.name}")
-    classified = (
-        classify(docs, schema)
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.col("is_valid").cast("long")).alias("valid"),
-        )
-        .persist()
-    )
+    classified = classify(docs, schema).persist()
     try:
-        write_sinks(cfg, table, schema, classified, version)
+        metrics = write_sinks(cfg, table, schema, classified, version)
         # commit the newly-processed file list AFTER the sinks succeed:
         # a crash before this append leaves files unrecorded → they are
         # re-processed next run (at-least-once into append sinks; flip
@@ -958,15 +895,7 @@ def run_table_incremental(
         classified.select("file_path").distinct().write.mode("append").parquet(
             state_path
         )
-        got = obs.get
-        total = got["total"] or 0
-        valid = got["valid"] or 0
-        return TableMetrics(
-            table=table.name,
-            file_count=total,
-            valid_count=valid,
-            invalid_count=total - valid,
-        )
+        return metrics
     finally:
         classified.unpersist()
 

@@ -316,6 +316,54 @@ def test_incremental_processes_only_new_files(spark, tmp_path):
     assert len(ids) == len(set(ids))
 
 
+@pytest.mark.parametrize(
+    "corrupt_rate,repair_rate", [(0, 0), (0.02, 0.10)], ids=["clean", "dirty"]
+)
+def test_run_table_counters_match_corpus(spark, tmp_path, corrupt_rate, repair_rate):
+    """run_table's counter triple equals the corpus ground truth, decided
+    by Python's json (corrupt) and key presence (repairable). A clean
+    batch reports (n, n, 0) and creates neither error-path sink."""
+    from local_etl_spark.etl.corpus import generate, user_schema, write_user_schema
+    from local_etl_spark.etl.pipeline import PipelineConfig, TableConfig, run_table
+
+    docs = generate(120, seed=5, corrupt_rate=corrupt_rate, repair_rate=repair_rate)
+    data_dir = tmp_path / "users"
+    data_dir.mkdir()
+    for i, raw in enumerate(docs):
+        (data_dir / f"ev{i:05d}.json").write_text(raw)
+    required = user_schema()["properties"]["payload"]["required"]
+    invalid = 0
+    for raw in docs:
+        try:
+            payload = json.loads(raw)["payload"]
+        except json.JSONDecodeError:
+            invalid += 1
+            continue
+        invalid += any(f not in payload for f in required)
+    if corrupt_rate:
+        assert invalid > 0, "the dirty corpus must exercise the error path"
+
+    out = tmp_path / "out"
+    cfg = PipelineConfig(
+        tables=(
+            TableConfig(
+                name="users",
+                schema_file=write_user_schema(str(tmp_path / "user-schema.json")),
+                data_dir=str(data_dir),
+                schema_mismatch_dir=str(out / "quarantine"),
+                payload_file=str(out / "users.csv"),
+                metadata_file=str(out / "metadata.csv"),
+            ),
+        ),
+        base_dir=str(out),
+    )
+    m = run_table(spark, cfg, cfg.tables[0])
+    n = len(docs)
+    assert (m.file_count, m.valid_count, m.invalid_count) == (n, n - invalid, invalid)
+    errors_created = (out / "quarantine").exists(), (out / "errors.log.d").exists()
+    assert errors_created == ((True, True) if invalid else (False, False))
+
+
 def test_parse_event_rewrite_collision(spark):
     """Pins the documented _parse_event divergence (ADVICE r4): a doc
     that fails the first parse (bare NaN) AND carries a quoted string

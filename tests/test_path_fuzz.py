@@ -12,7 +12,7 @@ worth guarding:
     reference processes it like any file. read_event_docs now detects
     colon names driver-side, swaps the main scan to an explicit
     GLOB-ESCAPED path list without them, and reads them through the
-    hidden-file sidechannel (pipeline._colon_json_files/_glob_escape).
+    hidden-file sidechannel (pipeline._json_files/_glob_escape).
   - glob_meta: filenames containing glob metacharacters
     ('ev[1].json', 'ev*.json', 'ev?.json', braces, a space) are
     LISTED, not glob-expanded, by both sides — full live diff clean,
@@ -108,13 +108,13 @@ def test_glob_metachar_names_not_expanded(spark, tmp_path):
 def test_colon_named_dirs_tolerated(spark, tmp_path):
     """Unit pin for ADVICE r12: colon-named child DIRS (with and
     without a '.json' suffix) leave the plain dir scan intact — no
-    crash, no rows from inside them, and _colon_json_files correctly
-    reports NO colon files (the explicit-path repair branch must NOT
+    crash, no rows from inside them, and _json_files correctly
+    lists NO colon entries (the explicit-path repair branch must NOT
     trigger for dirs: it would skip every other file if the dir were
     the only colon entry and the listing branch misfired)."""
     import os
 
-    from local_etl_spark.etl.pipeline import _colon_json_files, read_event_docs
+    from local_etl_spark.etl.pipeline import _json_files, read_event_docs
 
     d = tmp_path / "data"
     d.mkdir()
@@ -122,7 +122,7 @@ def test_colon_named_dirs_tolerated(spark, tmp_path):
     for dn in ("we:ird", "also:bad.json"):
         os.makedirs(d / dn)
         (d / dn / "inner.json").write_text(json.dumps(sfz._user_doc(7)))
-    assert _colon_json_files(str(d)) == []
+    assert _json_files(str(d)) == [str(d / "plain.json")]
     rows = read_event_docs(spark, str(d)).collect()
     assert [r["file_path"].rsplit("/", 1)[-1] for r in rows] == ["plain.json"]
 

@@ -10,7 +10,7 @@ suite re-runs the scenarios that pin behavior worth guarding:
     dot/underscore-prefixed names (the Hadoop metadata convention),
     while the reference's endswith('.json') processes '.json' and
     '_backup.json' as data. read_event_docs now repairs this with a
-    driver-listed executor-side union (pipeline._hidden_json_files).
+    driver-listed executor-side union (pipeline._json_files).
   - cross_schema_docs: a valid CARDS doc in the users dir validates
     against the USERS schema — repaired row, prefix/suffix from
     created_by_name while the name slot stays '' (the r9 split-

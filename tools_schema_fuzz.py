@@ -398,7 +398,7 @@ def run_scenario(spark, name: str, us: dict, cs: dict, root: Path) -> list[str]:
         for tbl in ("users", "cards"):
             # reference MOVES invalid files; the engine records
             # (file_path, raw) parquet rows — compare basename sets
-            # and the verbatim text (the tools_deep_fuzz surface)
+            # and the verbatim text
             rq = {
                 os.path.basename(p): open(p, encoding="utf-8").read()
                 for p in glob.glob(
