@@ -1,13 +1,19 @@
-"""Benchmark harness: run headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: run the headline queries and the two ETL layouts
+at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS], from the repository root.
 
 Prints ONE JSON line:
   {"metric": "...", "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ...}
 
-Each query timing includes a full action (count of the result) so the
-whole plan — scan, shuffle, agg — executes. A warm-up query runs first
-so JVM/codegen startup isn't attributed to the first headline query.
+Each entry is the best of RUNS executions. A query execution writes
+every column of its result to the ``noop`` sink, so the whole plan runs
+(a ``count()`` would let Catalyst prune projections); an ETL execution
+is one pipeline run into a fresh output dir. A warm-up scan of every
+table runs first so JVM startup isn't attributed to the first entry.
+Full-precision timings, each entry's ambient CPU and the host
+calibration at the start and the end of the run
+(``perfbench.hostprobe.calibrate``) go to BENCH_ambient_last.json.
 """
 
 from __future__ import annotations
@@ -15,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -22,130 +29,38 @@ REPO = Path(__file__).resolve().parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
+from perfbench import hostprobe  # noqa: E402
+
+RUNS = 2
+
 HEADLINE = [
-    "agg_groupby",
-    "agg_global",
-    "agg_rollup",
-    "join_multiway",
-    "join_broadcast",
-    "win_rank",
-    "topk_per_group",
-    "stream_tumbling",
-    "stream_session",
-    "llm_dedup_exact",
-    "llm_dedup_ngram",
-    "llm_dedup_substring",
-    "llm_simsearch",
-    "llm_tfidf",
-    "llm_text_stats",
-    "llm_repetition",
-    "llm_filter_pipeline",
-    "llm_bm25",
-    "llm_token_entropy",
-    "llm_curate_e2e",
-    "agg_funnel",
-    "agg_minmax_by",
-    "agg_mode",
-    # round-2 additions: runtime pruning, manifest skipping, pattern
-    # sessionization, importance weighting, chained streaming agg.
-    # The two sink-backed entries (dpp/skipping) write their clustered
-    # layout on the first attempt only — best-of-2 reports the steady
-    # read-path number, which is what the layout exists to buy.
-    "join_dpp",
-    "scan_skipping",
-    "win_match_recognize",
-    "llm_dsir_weight",
-    "stream_chained_agg",
-    # round-3 additions: the r2 oracle-fix queries join the headline
-    # suite (VERDICT r2 item 8) + the new runtime bloom-filter join.
-    "stream_sliding",
-    "llm_pack_sequences",
-    "llm_mix_weighted",
-    "sink_compaction",
-    "scan_parquet_evolve",
-    "scan_csv_malformed",
-    "join_bloom",
-    # round-3 new-operator representatives (one per family batch)
-    "llm_boilerplate_chunks",
-    "llm_bpe_pairs",
-    "graph_triangles",
-    "agg_corr_matrix",
-    "agg_ks_test",
-    "win_drawdown",
-    # late round-3 additions
-    "llm_rouge_overlap",
-    "llm_span_corruption",
-    "win_interpolate",
-    "sql_filter_clause",
-    "etl_table_diff",
-    # round-4 additions
-    "win_sessionize",
-    "win_gap_fill",
-    "llm_dedup_lsh_cosine",
-    "llm_bpe_train",
-    "sink_dynamic_overwrite",
-    # round-5 additions: the heaviest previously-unbenched operators
-    # (VERDICT r4 item 8) so their regressions land in this ledger, plus
-    # the rewritten hot-bucket-proof minhash
-    "llm_semdedup",
-    "llm_simsearch_ivf",
-    "graph_pagerank",
-    "llm_dedup_prefix",
-    "etl_upsert",
-    "llm_dedup_minhash",
-    # round-6 additions: new-operator representatives (PQ encode+ADC
-    # scan, the Arrow perceptual-hash pass + band joins, the LPA
-    # iteration loop, the original-shape partsupp Q2)
-    "llm_simsearch_pq",
-    "llm_image_phash",
-    "graph_label_prop",
-    "sql_q2",
-    # round-7 additions: the end-to-end dedup pipeline (minhash → CC →
-    # canonical) and the BFD packer; llm_dedup_simhash joins now that
-    # its md5 hashing is oracle-grade (conversion cost visibility)
-    "llm_dedup_e2e",
-    "llm_pack_bfd",
-    "llm_dedup_simhash",
-    # round-8 additions: the composite dedup/retrieval eval harnesses,
-    # the down-weighting dedup (e2e-composite), the incremental
-    # near-dup shape, and the K-permutation null-distribution build
-    "llm_softdedup",
-    "llm_retrieval_eval",
-    "llm_dedup_incremental_near",
-    "agg_permutation_test",
-    # round-9 additions: stage-0 URL dedup, the perplexity-bucket mixer
-    # (rides the full bigram-LM scoring pipeline), the split-sessionize
-    # skew mitigation, the sequential mSPRT fold, and the iterative
-    # Brandes loop (the round's heaviest new machinery)
-    "llm_dedup_url",
-    "llm_quality_buckets",
-    "win_sessionize_split",
-    "agg_msprt",
-    "graph_betweenness_sample",
-    "win_bollinger",
-    "llm_ppl_filter_sweep",
-    # round-10 additions: the audio-fingerprint banded dedup (media
-    # synthesis + Arrow kernel + 8 band joins), the now-SQL-oracled
-    # harmonic-closeness BFS loop, and the group-sequential test
-    "llm_audio_fingerprint",
-    "graph_closeness_sample",
-    "agg_gst_obrien_fleming",
-    # round-11 additions: the incremental IVF maintenance roll (assign
-    # + partitioned append + drift census), the vocab OOV audit, the
-    # LSH banding sweep (three band joins over the md5-affine draws),
-    # the Croston intermittent-demand folds, and the two light
-    # forecasting-gate entries
-    "llm_ann_ivf_incremental",
-    "llm_tokenizer_coverage",
-    "llm_lsh_band_sweep",
-    "win_croston",
-    "win_rsi",
-    "win_seasonality_strength",
-    # round-12 additions: the embedding-distribution drift monitor
-    # (two-level ordered folds over all 64 dims) and the tokenizer
-    # vocab-checkpoint sweep (three prefix segmentation passes off one
-    # trained chain)
-    "llm_embedding_drift",
+    "agg_groupby", "agg_global", "agg_rollup", "join_multiway",
+    "join_broadcast", "win_rank", "topk_per_group", "stream_tumbling",
+    "stream_session", "llm_dedup_exact", "llm_dedup_ngram",
+    "llm_dedup_substring", "llm_simsearch", "llm_tfidf", "llm_text_stats",
+    "llm_repetition", "llm_filter_pipeline", "llm_bm25",
+    "llm_token_entropy", "llm_curate_e2e", "agg_funnel", "agg_minmax_by",
+    "agg_mode", "join_dpp", "scan_skipping", "win_match_recognize",
+    "llm_dsir_weight", "stream_chained_agg", "stream_sliding",
+    "llm_pack_sequences", "llm_mix_weighted", "sink_compaction",
+    "scan_parquet_evolve", "scan_csv_malformed", "join_bloom",
+    "llm_boilerplate_chunks", "llm_bpe_pairs", "graph_triangles",
+    "agg_corr_matrix", "agg_ks_test", "win_drawdown", "llm_rouge_overlap",
+    "llm_span_corruption", "win_interpolate", "sql_filter_clause",
+    "etl_table_diff", "win_sessionize", "win_gap_fill",
+    "llm_dedup_lsh_cosine", "llm_bpe_train", "sink_dynamic_overwrite",
+    "llm_semdedup", "llm_simsearch_ivf", "graph_pagerank",
+    "llm_dedup_prefix", "etl_upsert", "llm_dedup_minhash",
+    "llm_simsearch_pq", "llm_image_phash", "graph_label_prop", "sql_q2",
+    "llm_dedup_e2e", "llm_pack_bfd", "llm_dedup_simhash", "llm_softdedup",
+    "llm_retrieval_eval", "llm_dedup_incremental_near",
+    "agg_permutation_test", "llm_dedup_url", "llm_quality_buckets",
+    "win_sessionize_split", "agg_msprt", "graph_betweenness_sample",
+    "win_bollinger", "llm_ppl_filter_sweep", "llm_audio_fingerprint",
+    "graph_closeness_sample", "agg_gst_obrien_fleming",
+    "llm_ann_ivf_incremental", "llm_tokenizer_coverage",
+    "llm_lsh_band_sweep", "win_croston", "win_rsi",
+    "win_seasonality_strength", "llm_embedding_drift",
     "llm_bpe_vocab_sweep",
 ]
 
@@ -156,16 +71,38 @@ ETL_EVENTS_JSONL = 50_000
 ETL_EVENTS_FILES = 2_000
 
 
-def bench_etl(
-    spark,
-    sf: float,
-    tmp_root: str,
-    runs: int = 2,
-    meter: "_AmbientMeter | None" = None,
-    ambient: dict[str, float] | None = None,
-) -> dict[str, float]:
-    import shutil
+def _cpu_ticks() -> tuple[int, int, float]:
+    """(machine busy ticks, this process tree's CPU ticks, wall clock).
+    The tree is walked afresh each time: the JVM and its Python workers
+    are children of this process."""
+    return (
+        hostprobe._machine_busy_ticks(),
+        hostprobe._tree_cpu_ticks(hostprobe.tree_pids()),
+        time.perf_counter(),
+    )
 
+
+def time_entry(name: str, run, timings: dict, ambient: dict) -> None:
+    """Best of RUNS calls of ``run(attempt)`` into ``timings[name]``,
+    and the CPU other processes used meanwhile, in cores, into
+    ``ambient[name]``: the bench's own process tree is subtracted, so
+    the reading is co-tenant load alone."""
+    busy0, self0, wall0 = _cpu_ticks()
+    best = float("inf")
+    for attempt in range(RUNS):
+        start = time.perf_counter()
+        run(attempt)
+        best = min(best, time.perf_counter() - start)
+    busy1, self1, wall1 = _cpu_ticks()
+    other = (busy1 - busy0) - (self1 - self0)
+    timings[name] = round(best, 4)
+    ambient[name] = round(max(0.0, other / hostprobe.CLK_TCK / (wall1 - wall0)), 2)
+
+
+def bench_etl(spark, sf: float, tmp_root: str, timings: dict, ambient: dict) -> None:
+    """Time both ETL layouts through the v2 sinks: the per-file corpus
+    with ``run_table`` (the reference's run) and the JSONL shards with
+    ``read_event_lines`` → ``classify`` → ``write_sinks``."""
     from local_etl_spark.etl.corpus import (
         write_jsonl_corpus,
         write_per_file_corpus,
@@ -175,7 +112,6 @@ def bench_etl(
         PipelineConfig,
         TableConfig,
         classify,
-        read_event_docs,
         read_event_lines,
         run_table,
         write_sinks,
@@ -183,378 +119,96 @@ def bench_etl(
     from local_etl_spark.etl.schema_translate import load_schema
 
     scale = max(sf / 0.1, 0.01)
-    n_jsonl = int(ETL_EVENTS_JSONL * scale)
     n_files = int(ETL_EVENTS_FILES * scale)
-    corpus_root = os.path.join(tmp_root, f"etl_corpus_sf{sf}")
-    files_dir = write_per_file_corpus(
-        os.path.join(corpus_root, "users"), n_files
-    )
+    n_jsonl = int(ETL_EVENTS_JSONL * scale)
+    files_dir = write_per_file_corpus(os.path.join(tmp_root, "users"), n_files)
     jsonl_dir = write_jsonl_corpus(
-        os.path.join(corpus_root, "users_jsonl"), n_jsonl, shards=32
+        os.path.join(tmp_root, "users_jsonl"), n_jsonl, shards=32
     )
-    schema_path = write_user_schema(os.path.join(corpus_root, "user-schema.json"))
-    timings = {}
-
-    # per-file layout: full pipeline incl. 3 sinks (the reference's run).
-    # best-of-2 like the headline queries: run 1 pays one-time codegen
-    # compilation of the validate/render expression trees; run 2 is the
-    # steady-state number (what a long-running cluster actually sees).
-    best = float("inf")
-    if meter is not None:
-        meter.mark()
-    for attempt in range(runs):
-        out1 = os.path.join(tmp_root, f"etl_out_files_{attempt}")
-        shutil.rmtree(out1, ignore_errors=True)
-        cfg = PipelineConfig(
-            tables=(
-                TableConfig(
-                    name="users",
-                    schema_file=schema_path,
-                    data_dir=files_dir,
-                    schema_mismatch_dir=os.path.join(out1, "quarantine"),
-                    payload_file=os.path.join(out1, "users.csv"),
-                    metadata_file=os.path.join(out1, "metadata.csv"),
-                ),
-            ),
-            base_dir=out1,
-        )
-        start = time.perf_counter()
-        run_table(spark, cfg, cfg.tables[0], version=2)
-        best = min(best, time.perf_counter() - start)
-    timings[f"etl_files_{n_files}"] = round(best, 4)
-    if meter is not None and ambient is not None:
-        amb = meter.read()
-        if amb is not None:
-            ambient[f"etl_files_{n_files}"] = round(amb, 2)
-
-    # JSONL layout: same classify + sinks over splittable shards
+    schema_path = write_user_schema(os.path.join(tmp_root, "user-schema.json"))
     schema = load_schema(schema_path)
-    best = float("inf")
-    if meter is not None:
-        meter.mark()
-    for attempt in range(runs):
-        out2 = os.path.join(tmp_root, f"etl_out_jsonl_{attempt}")
-        shutil.rmtree(out2, ignore_errors=True)
-        cfg2 = PipelineConfig(
-            tables=(
-                TableConfig(
-                    name="users",
-                    schema_file=schema_path,
-                    data_dir=jsonl_dir,
-                    schema_mismatch_dir=os.path.join(out2, "quarantine"),
-                    payload_file=os.path.join(out2, "users.csv"),
-                    metadata_file=os.path.join(out2, "metadata.csv"),
-                ),
-            ),
-            base_dir=out2,
+
+    def config(out: str, data_dir: str) -> PipelineConfig:
+        out = os.path.join(tmp_root, out)
+        return PipelineConfig(
+            tables=(TableConfig(
+                name="users",
+                schema_file=schema_path,
+                data_dir=data_dir,
+                schema_mismatch_dir=os.path.join(out, "quarantine"),
+                payload_file=os.path.join(out, "users.csv"),
+                metadata_file=os.path.join(out, "metadata.csv"),
+            ),),
+            base_dir=out,
         )
-        start = time.perf_counter()
-        docs = read_event_lines(spark, jsonl_dir)
-        classified = classify(docs, schema).persist()
-        # no explicit count: the first sink write materializes the cache,
-        # saving one full-scan job
-        write_sinks(cfg2, cfg2.tables[0], schema, classified, version=2)
-        classified.unpersist()
-        best = min(best, time.perf_counter() - start)
-    timings[f"etl_jsonl_{n_jsonl}"] = round(best, 4)
-    if meter is not None and ambient is not None:
-        amb = meter.read()
-        if amb is not None:
-            ambient[f"etl_jsonl_{n_jsonl}"] = round(amb, 2)
-    return timings
 
+    def run_files(attempt: int) -> None:
+        cfg = config(f"files_out_{attempt}", files_dir)
+        run_table(spark, cfg, cfg.tables[0], version=2)
 
-# Idle-window discipline (VERDICT r6 item 3): timed passes start only
-# once 1-minute loadavg drops below LOAD_MAX, polling up to LOAD_WAIT_S
-# seconds. If the window never opens (ambient co-tenant load), the
-# bench proceeds with MORE repetitions per query (best-of-3 instead of
-# best-of-2) so the min absorbs load spikes, and the JSON records both
-# the wait and the repetition count so regressions stay adjudicable.
-LOAD_MAX = float(os.environ.get("SPARK_GRAFT_LOAD_MAX", "2.0"))
-LOAD_WAIT_S = float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "240"))
-
-
-def _wait_for_idle() -> tuple[float | None, float]:
-    """Poll loadavg until below LOAD_MAX or the wait budget runs out.
-    Returns (loadavg at start of timed work, seconds waited)."""
-    waited = 0.0
-    try:
-        load = os.getloadavg()[0]
-    except OSError:
-        return None, 0.0
-    while load >= LOAD_MAX and waited < LOAD_WAIT_S:
-        time.sleep(15)
-        waited += 15
-        load = os.getloadavg()[0]
-    return round(load, 2), round(waited, 1)
-
-
-# --- Per-entry ambient-load accounting (VERDICT r7 item 2) -----------
-#
-# The 1-minute loadavg cannot gate BETWEEN entries: the bench's own
-# local[32] stages keep it elevated for ~a minute after every query, so
-# a mid-run loadavg re-wait would stall on self-inflicted load (r7's
-# idle artifact "degraded" to loadavg 10.45 mostly by measuring
-# itself). Instead each entry records AMBIENT CPU — total busy jiffies
-# from /proc/stat minus the jiffies consumed by our own process tree
-# (this python + the JVM + pyspark workers) — expressed in cores. That
-# is a co-tenant metric the bench cannot pollute. Entries whose ambient
-# load exceeded LOAD_MAX cores get a bounded re-wait and ONE extra
-# repetition, and the JSON carries the per-entry readings so any
-# residual flip-band delta is adjudicable from the artifact alone.
-
-_HZ = os.sysconf("SC_CLK_TCK") if hasattr(os, "sysconf") else 100
-
-
-def _proc_stat_busy() -> int | None:
-    """All-CPU busy jiffies (total minus idle+iowait)."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(x) for x in parts[1:]]
-    except (OSError, ValueError, IndexError):
-        return None
-    return sum(vals) - vals[3] - vals[4]
-
-
-def _self_tree_cpu() -> int | None:
-    """utime+stime jiffies summed over this process and every live
-    descendant (the py4j JVM and its pyspark.daemon workers are
-    children, not reaped, so os.times() can't see them)."""
-    try:
-        pids = [int(d) for d in os.listdir("/proc") if d.isdigit()]
-    except OSError:
-        return None
-    ppid: dict[int, int] = {}
-    cpu: dict[int, int] = {}
-    for p in pids:
+    def run_jsonl(attempt: int) -> None:
+        cfg = config(f"jsonl_out_{attempt}", jsonl_dir)
+        classified = classify(read_event_lines(spark, jsonl_dir), schema).persist()
         try:
-            with open(f"/proc/{p}/stat") as f:
-                s = f.read()
-            rest = s[s.rindex(")") + 2 :].split()
-            ppid[p] = int(rest[1])
-            cpu[p] = int(rest[11]) + int(rest[12])
-        except (OSError, ValueError, IndexError):
-            continue
-    kids: dict[int, list[int]] = {}
-    for p, pp in ppid.items():
-        kids.setdefault(pp, []).append(p)
-    total, stack = 0, [os.getpid()]
-    while stack:
-        p = stack.pop()
-        total += cpu.get(p, 0)
-        stack.extend(kids.get(p, []))
-    return total
+            write_sinks(cfg, cfg.tables[0], schema, classified, version=2)
+        finally:
+            classified.unpersist()
 
-
-class _AmbientMeter:
-    """Delta-based ambient-cores readings between .mark() calls."""
-
-    def __init__(self) -> None:
-        self.ok = _proc_stat_busy() is not None
-        self.mark()
-
-    def mark(self) -> None:
-        self._busy = _proc_stat_busy()
-        self._self = _self_tree_cpu()
-        self._t = time.perf_counter()
-
-    def read(self) -> float | None:
-        """Ambient (non-self) busy cores since the last mark()."""
-        if not self.ok:
-            return None
-        busy, selfj = _proc_stat_busy(), _self_tree_cpu()
-        dt = time.perf_counter() - self._t
-        if busy is None or selfj is None or self._busy is None or dt <= 0:
-            return None
-        other = (busy - self._busy) - (selfj - (self._self or 0))
-        return max(0.0, other / (dt * _HZ))
-
-    def wait_below(self, limit: float, budget_s: float) -> float:
-        """Sleep in 3 s probe windows until ambient cores < limit or
-        the budget runs out. Returns seconds waited."""
-        waited = 0.0
-        while waited < budget_s:
-            self.mark()
-            time.sleep(3)
-            waited += 3
-            amb = self.read()
-            if amb is None or amb < limit:
-                break
-        self.mark()
-        return round(waited, 1)
-
-
-def _cpu_calibration() -> float:
-    """Single-thread CPU speed probe: million trivial-loop iterations
-    per second, best of 3 back-to-back reps (~1 s total).
-
-    Round 10 finding: the HOST's per-core speed is bimodal — the
-    identical pure-Python loop measured 0.37 s and 0.85 s per 10M
-    iterations within minutes on an idle VM (zero steal, ambient
-    0 cores, loadavg <1). Mode flips on minute timescales explain the
-    uniform round-over-round idle-artifact shifts (r9 median 1.13×
-    vs r8, the r10 pre-round rep 1.45× vs r9) that per-entry ambient
-    CPU cannot see. Recording the calibration alongside the timings
-    lets cross-round comparisons normalize: similar calib ⇒ a shift
-    is code; proportional calib ⇒ it's the host.
-    """
-    best = float("inf")
-    for _ in range(3):
-        t = time.perf_counter()
-        s = 0
-        for i in range(10_000_000):
-            s += i
-        best = min(best, time.perf_counter() - t)
-    return round(10.0 / best, 2)
-
-
-def _burn(n: int) -> None:
-    s = 0
-    for i in range(n):
-        s += i
-
-
-def _cpu_calibration_mt() -> float:
-    """All-core aggregate Miter/s (one burn per core via a process
-    pool): the local[32] workloads are throttled by the MULTI-core
-    clock, which round-10 probing showed can move independently of
-    the single-thread reading (scaling stays ~perfect; the per-core
-    clock wanders 8–30 Miter/s on minute timescales)."""
-    import multiprocessing as mp
-
-    n = os.cpu_count() or 1
-    try:
-        with mp.Pool(n) as pool:
-            t = time.perf_counter()
-            pool.map(_burn, [5_000_000] * n)
-            return round(5.0 * n / (time.perf_counter() - t), 1)
-    except OSError:
-        return 0.0
+    time_entry(f"etl_files_{n_files}", run_files, timings, ambient)
+    time_entry(f"etl_jsonl_{n_jsonl}", run_jsonl, timings, ambient)
 
 
 def main() -> None:
-    # ambient load BEFORE the bench's own work starts — the end-of-run
-    # reading mostly measures the bench itself (local[32] queries keep
-    # 1m-loadavg elevated), so adjudicating "was the machine busy"
-    # needs the start value (VERDICT r5 item 6)
-    load_start, load_waited = _wait_for_idle()
-    calib_start = _cpu_calibration()
-    calib_mt_start = _cpu_calibration_mt()
-    runs = 2 if (load_start is None or load_start < LOAD_MAX) else 3
+    calib_start = hostprobe.calibrate()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from local_etl_spark.catalog import TABLES, table
     from local_etl_spark.registry import all_queries
     from local_etl_spark.session import get_spark
 
+    registered = all_queries()
+    # a renamed or deleted query fails here, before any Spark work,
+    # rather than silently dropping out of the contract
+    queries = {name: registered[name] for name in HEADLINE}
+
     spark = get_spark("local-etl-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
-    names = [n for n in HEADLINE if n in queries]
-
-    # Warm-up: touch every table once so OS page cache + JVM are warm.
-    from local_etl_spark.catalog import TABLES, table
-
     for name in TABLES:
         table(spark, sf_dir, name).count()
 
     timings: dict[str, float] = {}
     ambient: dict[str, float] = {}
-    meter = _AmbientMeter()
-    # shared mid-run re-wait budget: a few dirty entries may pause for
-    # the co-tenant to finish, but the run as a whole stays bounded
-    rewait_budget = LOAD_WAIT_S
-    rewait_total = 0.0
-    for name in names:
-        # best-of-N: later runs amortize codegen compilation and
-        # OS-cache warmup, giving a stable steady-state number; N goes
-        # 2→3 when the idle window never opened (min absorbs spikes)
-        best = float("inf")
-        meter.mark()
-        for _ in range(runs):
-            start = time.perf_counter()
-            df = queries[name](spark, sf_dir)
-            df.count()
-            best = min(best, time.perf_counter() - start)
-        amb = meter.read()
-        if amb is not None:
-            ambient[name] = round(amb, 2)
-            if amb >= LOAD_MAX and rewait_budget > 0:
-                # entry ran against a busy co-tenant: wait for the
-                # ambient window to re-open and take one clean rep
-                waited = meter.wait_below(LOAD_MAX, min(60.0, rewait_budget))
-                rewait_budget -= waited
-                rewait_total += waited
-                start = time.perf_counter()
-                df = queries[name](spark, sf_dir)
-                df.count()
-                best = min(best, time.perf_counter() - start)
-                amb2 = meter.read()
-                if amb2 is not None:
-                    ambient[name] = round(min(amb, amb2), 2)
-        timings[name] = round(best, 4)
+    for name, query in queries.items():
+
+        def run(_attempt: int, query=query) -> None:
+            query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+        time_entry(name, run, timings, ambient)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_num = float(sf) if sf.replace(".", "").isdigit() else 0.1
-    import tempfile
-
-    timings.update(
-        bench_etl(
-            spark,
-            sf_num,
-            os.path.join(tempfile.gettempdir(), "local_etl_spark_bench"),
-            runs=runs,
-            meter=meter,
-            ambient=ambient,
-        )
-    )
+    try:
+        with tempfile.TemporaryDirectory() as tmp:
+            bench_etl(spark, sf_num, tmp, timings, ambient)
+    finally:
+        hostprobe.shutdown_spark(spark)
+    calib_end = hostprobe.calibrate()
 
     total = round(sum(timings.values()), 4)
-    # load visibility (VERDICT r4 item 3): ambient machine load inflates
-    # single-shot numbers 1.5-2x uniformly; recording the 1-minute
-    # loadavg makes per-query deltas adjudicable from the JSON alone
-    try:
-        load1 = round(os.getloadavg()[0], 2)
-    except OSError:
-        load1 = None
     # The external driver keeps only the LAST 2000 CHARS of stdout and
-    # parses the final JSON line out of that window. Round 8's line grew
-    # to ~3.8 KB (the per-entry ambient_cores map) and came back
-    # parsed:null — the first blind bench gate in eight rounds (VERDICT
-    # r8 #1). Two-part fix: (a) full-precision timings + per-entry
-    # ambient diagnostics go to a side artifact the judge can read;
-    # (b) the driver-facing line carries only the contract fields, with
-    # tight separators and per-query precision that steps down 4→3→2
-    # decimals until the line fits the 2000-char capture with headroom.
-    diag_path = str(REPO / "BENCH_ambient_last.json")
+    # parses the final JSON line out of that window, so full-precision
+    # timings and the per-entry diagnostics go to a side artifact and
+    # the stdout line carries only the contract fields (contract_line).
     try:
-        with open(diag_path, "w") as f:
+        with open(REPO / "BENCH_ambient_last.json", "w") as f:
             json.dump(
                 {
                     "sf": sf_num,
                     "queries": timings,
-                    "loadavg_1m": load1,
-                    "loadavg_start_1m": load_start,
-                    "load_waited_sec": load_waited,
-                    "runs_per_query": runs,
+                    "runs_per_query": RUNS,
                     "ncpu": os.cpu_count(),
-                    # per-entry co-tenant CPU (cores) during each
-                    # entry's timed reps — loadavg can't do this
-                    # mid-run because the bench's own stages keep it
-                    # elevated; this metric subtracts the bench's
-                    # process tree (VERDICT r7 #2)
                     "ambient_cores": ambient,
-                    # host-speed probe (Miter/s) at start and end —
-                    # bimodal host clock, see _cpu_calibration
-                    "calib_miter_s_start": calib_start,
-                    "calib_miter_s_end": _cpu_calibration(),
-                    # all-core probe at START and end (VERDICT r10 #3):
-                    # the multi-core clock moves independently of the
-                    # single-thread one, and local[32] workloads ride
-                    # it — both endpoints make cross-round ratios
-                    # normalizable instead of merely arguable
-                    "calib_mt_miter_s_start": calib_mt_start,
-                    "calib_mt_miter_s_end": _cpu_calibration_mt(),
-                    "rewait_sec": round(rewait_total, 1),
+                    "calib_start": calib_start,
+                    "calib_end": calib_end,
                     "wall_clock": time.strftime(
                         "%Y-%m-%dT%H:%M:%S", time.gmtime()
                     ),
@@ -563,9 +217,8 @@ def main() -> None:
                 indent=1,
             )
     except OSError:
-        pass
+        pass  # a read-only checkout still gets its contract line
     print(contract_line(total, timings, sf_num))
-    spark.stop()
 
 
 # Deterministic driver-visibility pin (VERDICT r13 #2). The old prune

@@ -13,7 +13,8 @@ reused across every round (at cluster scale, pre-`repartition` both
 sides by node id to pin it). ``localCheckpoint`` per round truncates
 lineage — without it round k re-executes rounds 1..k-1 (exponential
 plan growth) — and each loop frees the checkpoint it replaced
-(_util.free_checkpoint). The only driver-side values are the
+(_util.free_checkpoint). PageRank and label propagation run a fixed
+schedule; the only driver-side values are the fixpoint loops'
 per-round convergence scalar and the final model-sized result.
 """
 
@@ -21,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from local_etl_spark.queries._util import (
@@ -69,15 +70,6 @@ N_ITER = 12
 # executor (~16 B/node → ~32 MB at the cap); past this the shuffle
 # join takes over (see graph_pagerank body)
 PR_BROADCAST_MAX_NODES = 2_000_000
-# convergence early-exit: stop once the per-round L1 rank delta drops
-# below PR_TOL_L1 (VERDICT r5 #5). NOTE the measured negative result
-# (SCALE.md §14.3): PageRank's update is a DAMPING-contraction in L1,
-# and on the trade graph the delta contracts by exactly 0.85/round
-# (measured 1.49 → 0.25 over 12 rounds at sf0.1), so no tolerance
-# consistent with 12-round output can trigger inside the iteration
-# cap — the check exists for graphs that mix faster than the damping
-# bound and costs one model-sized join per round (~2% measured).
-PR_TOL_L1 = 1e-6
 # edge-cache packing target (see graph_pagerank body): re-partition
 # the persisted edge relation to ~this many rows per partition, capped
 # at the session parallelism — a pure local-regime optimization that
@@ -116,8 +108,6 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PR_SCALE = 10**15  # fixed-point rank units (round-12 oracle conversion)
-
 # Two tiers per iterative graph operator (pagerank, label_prop, mst):
 # below this DIRECTED pair count the whole iteration replays on the
 # driver in numpy over the collected (a, b, w) pair list — ~20 B/row,
@@ -146,10 +136,8 @@ def _pagerank_oracle(rounds: int) -> str:
     plain hash aggregation, map-side combine, no collect_list anywhere.
     Quantization error ≤ 0.5 ulp-of-1e-15 per edge per round, damped
     geometrically — the NumPy pytest still holds at 1e-9. Equality
-    needs the engine to run the full ``rounds`` iterations: the L1
-    early-exit CANNOT trigger under damping-bound contraction
-    (SCALE.md §14.3) and tests/test_graph.py pins the per-round L1
-    margin by exact integer replay."""
+    needs the engine to run the full ``rounds`` iterations, which both
+    tiers of graph_pagerank always do."""
     # the 0.85/0.15e15 literals below are DAMPING baked into shared
     # expression text — guard against a silent constant drift
     assert DAMPING == 0.85, "update the baked oracle literals"
@@ -213,8 +201,8 @@ def _pagerank_oracle(rounds: int) -> str:
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank over the supplier↔customer trade graph
-    (damping 0.85, ≤12 synchronous iterations with an L1-delta
-    convergence early-exit — power iteration in DataFrame algebra):
+    (damping 0.85, a fixed schedule of N_ITER = 12 synchronous
+    iterations — power iteration in DataFrame algebra):
 
         rank(v) ← (1-d)/N + d · Σ_{u→v} rank(u) · w(u,v)/outw(u)
 
@@ -237,8 +225,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     N_ITER rounds relationally; quantization error is ≤ 5e-16/round,
     damped — tests/test_graph.py still checks convergence to a NumPy
     power iteration within 1e-9, mass conservation, AND replays the
-    exact integer iteration in pure Python (which also pins that the
-    L1 early-exit cannot fire within the unrolled budget).
+    exact integer iteration in pure Python.
     """
     # r13: the directed (supplier, customer, cents) pair is PERSISTED
     # before the symmetric union / out-weight normalization reference
@@ -334,11 +321,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             # are order-free, so two scatters ≡ one over the union
             np.add.at(mass, bi, _rha(rf[ai] * p_ab))
             np.add.at(mass, ai, _rha(rf[bi] * p_ba))
-            new_rank = teleport + _rha(DAMPING * mass.astype(np.float64))
-            l1 = int(np.abs(new_rank - rank).sum())
-            rank = new_rank
-            if l1 < PR_TOL_L1 * PR_SCALE:
-                break
+            rank = teleport + _rha(DAMPING * mass.astype(np.float64))
         out = spark.createDataFrame(
             pd.DataFrame(
                 {
@@ -423,44 +406,21 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("mass")
             )
         )
-        prev = (
-            F.broadcast(ranks) if broadcast_ranks else ranks
-        ).withColumnRenamed("rank", "prev")
         new_rank = F.expr(
             f"CAST(round(0.15e15 / {n_nodes}) AS BIGINT)"
             " + CAST(round(0.85 * CAST(coalesce(mass, 0) AS DOUBLE))"
             " AS BIGINT)"
         ).alias("rank")
-        # convergence early-exit (VERDICT r5 #5): the L1 delta rides
-        # the checkpoint materialization as an observe() metric over a
-        # map-side prev-rank join — ZERO extra jobs (a separate
-        # delta-join job per round A/B-measured +17% on the whole
-        # query). See PR_TOL_L1 for why this is a safety net rather
-        # than a local-scale win (damping-bound contraction).
-        obs = Observation()
         done = ranks
         ranks = (
             nodes.join(contrib, "node", "left")
-            .join(prev, "node", "left")
-            .select("node", new_rank, "prev")
-            .observe(
-                obs,
-                F.sum(
-                    F.abs(
-                        F.col("rank")
-                        - F.coalesce("prev", F.lit(0).cast("bigint"))
-                    )
-                ).alias("l1"),
-            )
-            .select("node", "rank")
+            .select("node", new_rank)
             # per-round truncation; a sparser every-3rd-round schedule
             # was measured and saves nothing here — the per-iteration
             # edge-list shuffle, not the checkpoint job, is the cost
             .localCheckpoint()
         )
         free_checkpoint(done)
-        if obs.get["l1"] < PR_TOL_L1 * PR_SCALE:
-            break
     norm.unpersist()
     nodes.unpersist()
     return ranks.select(

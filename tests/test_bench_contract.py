@@ -131,3 +131,15 @@ def test_r14_visible_set_equals_r13_visible_set():
         "etl_files_2000", "etl_jsonl_50000"
     }
     assert d["omitted"] == len(extras)
+
+
+def test_headline_names_are_registered_unique_and_cover_pinned():
+    # bench.main indexes the registry by every HEADLINE name, so a
+    # renamed query fails the bench instead of leaving the contract
+    from bench import HEADLINE
+    from local_etl_spark.registry import all_queries
+
+    registered = all_queries()
+    assert [n for n in HEADLINE if n not in registered] == []
+    assert len(set(HEADLINE)) == len(HEADLINE)
+    assert _PINNED_VISIBLE <= set(HEADLINE)
